@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .operators.cosine_join import cosine_for_candidates, sparse_cosine_pairs
+from .operators.cosine_join import score_candidates_packed, sparse_cosine_pairs
 from .operators.topk import attach_to_keys, top_n_matches
 from .operators.tfidf import TfidfConfig, TfidfModel, fit_tfidf, vectorize
 
@@ -56,7 +56,8 @@ class TFIDFMatcher(BaseSparkMatcher):
     """Char n-gram TF-IDF cosine matcher (reference ``_tfidf.py``).
 
     ``use_blocking``: candidate pairs come from banded MinHash blocking
-    instead of the full term join; scores stay exact. ``None`` (default) =
+    instead of the full term join, scored exactly over packed map-side
+    vectors of the fitted model. ``None`` (default) =
     size-adaptive — blocking switches on automatically above
     ``AUTO_BLOCKING_MIN_DOCS`` total docs, so the facade path never runs
     the quadratic-on-hot-terms term self-join at corpus scale.
@@ -101,10 +102,6 @@ class TFIDFMatcher(BaseSparkMatcher):
             self._to_df = to_df if to_df is not None else from_df
             self.to_vec = vectorize(self.model, self._to_df, "key")
         to_df_eff = self._to_df
-        from_vec = (
-            self.to_vec if (exclude_self and re_train)
-            else vectorize(self.model, from_df, "key")
-        )
         use_blocking = self.use_blocking
         if use_blocking is None:  # size-adaptive
             n_total = from_df.count() + (
@@ -113,15 +110,27 @@ class TFIDFMatcher(BaseSparkMatcher):
             use_blocking = n_total > AUTO_BLOCKING_MIN_DOCS
         if use_blocking:
             from .operators.blocking import minhash_candidates
+            from .operators.mapside import vectorize_packed_mapside
 
             cands = minhash_candidates(
                 from_df, None if exclude_self else to_df_eff,
                 cfg=self.cfg, **self.blocking_conf,
             )
-            pairs = cosine_for_candidates(cands, from_vec, self.to_vec)
+            # exact cosine on the candidates over packed map-side vectors
+            # of the same fitted model — the ER pipeline's scorer
+            to_packed = vectorize_packed_mapside(self.model, to_df_eff, "key")
+            from_packed = (
+                to_packed if (exclude_self and re_train)
+                else vectorize_packed_mapside(self.model, from_df, "key")
+            )
+            pairs = score_candidates_packed(cands, from_packed, to_packed)
             if exclude_self:
                 pairs = pairs.where(F.col("from_id") != F.col("to_id"))
         else:
+            from_vec = (
+                self.to_vec if (exclude_self and re_train)
+                else vectorize(self.model, from_df, "key")
+            )
             pairs = sparse_cosine_pairs(
                 from_vec, self.to_vec, exclude_self=exclude_self
             )

@@ -66,21 +66,30 @@ XSCALE_MIN_DOCS = 8_000_000
 CANDIDATE_PAIR_BUDGET = 20_000_000
 
 
-def capped_pair_count(bands: DataFrame, cap: int | None) -> int:
-    """The EXACT row count the banded self-join will emit under a bucket
-    cap: Σ_buckets C(min(m, cap), 2) — one map-side-combined agg over the
-    band table (~20 B/row), no join. This is the pre-flight that makes
-    knob resolution MEASURED instead of guessed: doc count alone cannot
-    see band-key concentration (a shared-template code corpus puts >20%
-    of all docs behind ONE band key at any corpus size — BASELINE.md's
-    124k-doc post-mortem, 421M pairs under the permissive cap)."""
-    m = F.col("m") if cap is None else F.least(F.col("m"), F.lit(int(cap)))
-    row = (
-        bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .agg(F.coalesce(F.sum(m * (m - 1) / 2), F.lit(0.0)).alias("p"))
-        .collect()[0]
-    )
+def capped_pair_count(
+    bands: DataFrame, cap: int | None, to_bands: DataFrame | None = None
+) -> int:
+    """The EXACT row count the banded join will emit under a bucket cap:
+    Σ_buckets C(min(m, cap), 2) for a self-join, Σ min(mf, cap)·min(mt,
+    cap) over shared buckets when ``to_bands`` holds the to-side band
+    table — one map-side-combined agg per band table (~20 B/row). This is
+    the pre-flight that makes knob resolution MEASURED instead of guessed:
+    doc count alone cannot see band-key concentration (a shared-template
+    code corpus puts >20% of all docs behind ONE band key at any corpus
+    size — BASELINE.md's 124k-doc post-mortem, 421M pairs under the
+    permissive cap)."""
+    n = F.count(F.lit(1))
+    m = n if cap is None else F.least(n, F.lit(int(cap)))
+    sizes = bands.groupBy("band", "band_key").agg(m.alias("m"))
+    if to_bands is None:
+        pairs = F.col("m") * (F.col("m") - 1) / 2
+    else:
+        sizes = sizes.join(
+            to_bands.groupBy("band", "band_key").agg(m.alias("mt")),
+            ["band", "band_key"],
+        )
+        pairs = F.col("m") * F.col("mt")
+    row = sizes.agg(F.coalesce(F.sum(pairs), F.lit(0.0)).alias("p")).collect()[0]
     return int(row["p"])
 
 
@@ -89,31 +98,32 @@ def enforce_pair_budget(
     knobs: dict,
     budget: int | None = None,  # None → module CANDIDATE_PAIR_BUDGET
     stats: dict | None = None,
+    to_bands: DataFrame | None = None,
 ) -> dict:
     """Demote auto-resolved blocking knobs when the band table's MEASURED
     join fan-out exceeds ``budget``: cap → the SCALE cap, min_shared_bands
     → ≥2 (both apply at join time, so the band table is reused, not
-    recomputed). Returns the (possibly demoted) knob dict; ``stats``
+    recomputed). ``to_bands`` measures a two-sided join instead of the
+    self-join. Returns the (possibly demoted) knob dict; ``stats``
     receives the measured counts for manifests. Callers apply this only
     to AUTO-resolved knobs — explicit caller knobs are a contract."""
     if budget is None:
         budget = CANDIDATE_PAIR_BUDGET  # read at call time (testable)
-    measured = capped_pair_count(bands, knobs.get("max_bucket_size"))
+    measured = capped_pair_count(bands, knobs.get("max_bucket_size"), to_bands)
     out = dict(knobs)
-    demoted = False
-    if measured > budget:
+    demoted = measured > budget
+    if demoted:
         out["max_bucket_size"] = min(
             SCALE_KNOBS["max_bucket_size"],
             out["max_bucket_size"] or SCALE_KNOBS["max_bucket_size"],
         )
         out["min_shared_bands"] = max(out["min_shared_bands"] or 1, 2)
-        demoted = True
         # second step: a shared-template corpus can exceed the budget AT
         # the SCALE cap (10M-doc leg: 2.43B capped pairs — the demotion
         # had nothing stricter to reach). Re-measure under the SCALE cap
         # and fall through to the XSCALE tier if still over. One extra
         # map-side agg, paid only in the already-over-budget case.
-        if capped_pair_count(bands, out["max_bucket_size"]) > budget:
+        if capped_pair_count(bands, out["max_bucket_size"], to_bands) > budget:
             out["max_bucket_size"] = min(
                 XSCALE_KNOBS["max_bucket_size"], out["max_bucket_size"]
             )
@@ -126,7 +136,7 @@ def enforce_pair_budget(
         stats["demoted"] = demoted
         if demoted:
             stats["capped_pairs_at_demoted"] = capped_pair_count(
-                bands, out["max_bucket_size"]
+                bands, out["max_bucket_size"], to_bands
             )
     return out
 
@@ -167,6 +177,27 @@ def _as_doc_id(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
     if id_col == "doc_id":
         return df
     return df.select(F.col(id_col).alias("doc_id"), key_col)
+
+
+def _rank_milli(scored: DataFrame, top_n: int,
+                min_similarity: float) -> DataFrame:
+    """(from_id, to_id, sim_milli, rnk) from exact (from_id, to_id, sim)
+    scores: two-step milli quantization — same value as the dense
+    kernel's half-up floor(x*1000+0.5) for x >= 0 — then the top-n per
+    from_id on (sim_milli desc, to_id asc), the dense kernel's contract."""
+    milli = F.floor(F.round("sim", 3) * 1000 + F.lit(0.5)).cast("bigint")
+    min_milli = int(round(min_similarity * 1000)) if min_similarity > 0 else 0
+    ranked = (
+        scored.select("from_id", "to_id", milli.alias("sim_milli"))
+        .where(F.col("sim_milli") >= min_milli)
+    )
+    w = Window.partitionBy("from_id").orderBy(
+        F.desc("sim_milli"), F.asc("to_id")
+    )
+    return (
+        ranked.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= top_n)
+    )
 
 
 def tfidf_selfmatch_topk(
@@ -213,9 +244,9 @@ def tfidf_selfmatch_topk(
         model, docs, key_col, id_col=id_col
     ).localCheckpoint(eager=True)
     if dense_cosine.fits_broadcast(model.n_docs, dim):
-        return dense_cosine.tfidf_dense_topk_packed(
-            packed, dim, top_n=top_n, min_similarity=min_similarity,
-            exclude_self=True, n_docs=model.n_docs,
+        return dense_cosine.tfidf_dense_topk_packed_two(
+            packed, packed, dim, top_n=top_n, min_similarity=min_similarity,
+            exclude_self=True, n_to=model.n_docs,
         )
 
     from .cosine_join import score_candidates_packed
@@ -234,21 +265,8 @@ def tfidf_selfmatch_topk(
         band_rows, None, max_bucket_size=knobs["max_bucket_size"],
         min_shared_bands=knobs["min_shared_bands"],
     )
-    scored = score_candidates_packed(cands, packed, packed)
-    # two-step milli quantization — same value as the dense kernel's
-    # half-up floor(x*1000+0.5) for x >= 0
-    milli = F.floor(F.round("sim", 3) * 1000 + F.lit(0.5)).cast("bigint")
-    min_milli = int(round(min_similarity * 1000)) if min_similarity > 0 else 0
-    ranked = (
-        scored.select("from_id", "to_id", milli.alias("sim_milli"))
-        .where(F.col("sim_milli") >= min_milli)
-    )
-    w = Window.partitionBy("from_id").orderBy(
-        F.desc("sim_milli"), F.asc("to_id")
-    )
-    return (
-        ranked.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= top_n)
+    return _rank_milli(
+        score_candidates_packed(cands, packed, packed), top_n, min_similarity
     )
 
 
@@ -256,7 +274,6 @@ def tfidf_transform_topk(
     model,
     new_from: DataFrame,
     to_df: DataFrame,
-    to_vec: DataFrame | None = None,
     key_col: str = "key",
     top_n: int = 1,
     min_similarity: float = 0.0,
@@ -278,10 +295,8 @@ def tfidf_transform_topk(
     banded-MinHash two-list candidates + exact packed re-scoring —
     identical milli-quantized contract on both paths.
 
-    ``to_vec``: pre-vectorized to-side (the fitted serving index) to reuse
-    across transform calls on the DENSE branch; recomputed from ``to_df``
-    when None. The blocked branch always packs map-side (its vectors are
-    hash-packed arrays, a different layout).
+    Both branches score packed map-side vectors
+    (``mapside.vectorize_packed_mapside``) of ``new_from`` and ``to_df``.
 
     Blocking knobs at corpus scale: knobs left at None resolve via
     ``resolve_blocking_knobs`` on the TO-side size — the permissive set
@@ -292,7 +307,7 @@ def tfidf_transform_topk(
     with flat memory, BASELINE.md) above it. Explicit knobs always win.
     """
     from . import dense_cosine
-    from .tfidf import vectorize
+    from .mapside import vectorize_packed_mapside
 
     # checkpoint into a LOCAL model copy — mutating the caller's model
     # stacks checkpoints across repeated transform calls and races shared
@@ -301,26 +316,10 @@ def tfidf_transform_topk(
     dim = model.idf.count()
     n_to = to_df.count()
     if dense_cosine.fits_broadcast(n_to, dim):
-        if to_vec is not None:
-            # caller-supplied relational serving index (reused across
-            # transform calls): the term-row dense scorer path
-            new_vec = vectorize(model, new_from, key_col, id_col=id_col)
-            # the dense scorer makes several passes per input (vocab
-            # union, counts, matrix collect, stream) — truncate both
-            # lineages once
-            return dense_cosine.tfidf_dense_topk(
-                new_vec.localCheckpoint(eager=True),
-                to_vec.localCheckpoint(eager=True),
-                top_n=top_n,
-                min_similarity=min_similarity,
-            )
-        # default dense path: MAP-SIDE packed vectorization on both sides
-        # (value-identical float64 to the relational vectorize) feeding the
-        # packed two-list matmul kernel — no |docs|×|grams| exploded
-        # shuffle, no window norm, no per-input localCheckpoint (each side
-        # is consumed exactly once: to collects, from streams)
-        from .mapside import vectorize_packed_mapside
-
+        # MAP-SIDE packed vectorization on both sides feeding the packed
+        # two-list matmul kernel — no |docs|×|grams| exploded shuffle, no
+        # window norm, no per-input localCheckpoint (each side is consumed
+        # exactly once: to collects, from streams)
         return dense_cosine.tfidf_dense_topk_packed_two(
             vectorize_packed_mapside(model, new_from, key_col, id_col=id_col),
             vectorize_packed_mapside(model, to_df, key_col, id_col=id_col),
@@ -330,14 +329,10 @@ def tfidf_transform_topk(
             n_to=n_to,
         )
 
-    # blocked branch: MAP-SIDE packed vectorization (the ER-pipeline scale
-    # shape) — the relational vectorize explodes |docs|×|grams| term rows
-    # through a window norm, which at millions of docs is the memory
-    # bottleneck the mapside kernel exists to avoid; scores are identical
-    # float64 (xxhash64 term identity, merge-intersect kernel)
+    # blocked branch: the same packed vectors, scored on MinHash
+    # two-list candidates only
     from .blocking import minhash_candidates
     from .cosine_join import score_candidates_packed
-    from .mapside import vectorize_packed_mapside
 
     new_packed = vectorize_packed_mapside(
         model, new_from, key_col, id_col=id_col
@@ -362,17 +357,7 @@ def tfidf_transform_topk(
         ),
         **knobs,
     )
-    scored = score_candidates_packed(cands, new_packed, to_packed)
-    milli = F.floor(F.round("sim", 3) * 1000 + F.lit(0.5)).cast("bigint")
-    min_milli = int(round(min_similarity * 1000)) if min_similarity > 0 else 0
-    ranked = (
-        scored.select("from_id", "to_id", milli.alias("sim_milli"))
-        .where(F.col("sim_milli") >= min_milli)
-    )
-    w = Window.partitionBy("from_id").orderBy(
-        F.desc("sim_milli"), F.asc("to_id")
-    )
-    return (
-        ranked.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= top_n)
+    return _rank_milli(
+        score_candidates_packed(cands, new_packed, to_packed),
+        top_n, min_similarity,
     )

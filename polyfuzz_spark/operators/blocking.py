@@ -17,8 +17,9 @@ handled explicitly: buckets larger than ``max_bucket_size`` are dropped
 (stop-band heuristic — documented recall tradeoff) BEFORE the join, which
 bounds the worst-case join fan-out at bucket_cap² per band instead of n².
 
-Scoring afterwards is exact (cosine_for_candidates / pair scorer), so LSH
-only affects recall, never precision.
+Scoring afterwards is exact (``cosine_join.score_candidates_packed`` over
+packed TF-IDF vectors, or a pair scorer), so LSH only affects recall, never
+precision.
 """
 
 from __future__ import annotations
@@ -120,11 +121,11 @@ def minhash_candidates(
     banded join's output is MEASURED off the band tables before joining
     — Σ C(min(m, cap), 2) in self mode, Σ min(mf, cap)·min(mt, cap)
     two-sided — and the cap/min-shared demote to the SCALE values when
-    over budget. Doc-count knob regimes cannot see band-key
-    concentration (a shared-template corpus banded 22% of 124k docs
-    behind ONE key and emitted 421M pairs under the permissive cap —
-    BASELINE.md post-mortem). ``budget_stats`` receives the measured
-    counts.
+    over budget (``adaptive.enforce_pair_budget``). Doc-count knob
+    regimes cannot see band-key concentration (a shared-template corpus
+    banded 22% of 124k docs behind ONE key and emitted 421M pairs under
+    the permissive cap — BASELINE.md post-mortem). ``budget_stats``
+    receives the measured counts and the knobs the join ran with.
 
     Self mode (to_df None): both orientations kept, diagonal excluded —
     matching the downstream per-from top-k semantics.
@@ -159,72 +160,24 @@ def minhash_candidates(
             rows_per_band,
         )
     if pair_budget is not None:
-        from .adaptive import SCALE_KNOBS
+        from .adaptive import enforce_pair_budget
 
+        # the gate measures each band table, the join reads it again
         f_bands = f_bands.localCheckpoint(eager=True)
-        cap = max_bucket_size
-        mf = F.count(F.lit(1)) if cap is None else F.least(
-            F.count(F.lit(1)), F.lit(int(cap))
-        )
-        f_sizes = f_bands.groupBy("band", "band_key").agg(mf.alias("mf"))
-        if t_bands is None:
-            measured = int(
-                f_sizes.agg(
-                    F.coalesce(
-                        F.sum(F.col("mf") * (F.col("mf") - 1) / 2), F.lit(0.0)
-                    )
-                ).collect()[0][0]
-            )
-        else:
+        if t_bands is not None:
             t_bands = t_bands.localCheckpoint(eager=True)
-            t_sizes = t_bands.groupBy("band", "band_key").agg(mf.alias("mt"))
-            measured = int(
-                f_sizes.join(t_sizes, ["band", "band_key"])
-                .agg(
-                    F.coalesce(F.sum(F.col("mf") * F.col("mt")), F.lit(0.0))
-                ).collect()[0][0]
-            )
-        demoted = measured > pair_budget
-        if demoted:
-            from .adaptive import XSCALE_KNOBS
-
-            max_bucket_size = min(
-                SCALE_KNOBS["max_bucket_size"],
-                max_bucket_size or SCALE_KNOBS["max_bucket_size"],
-            )
-            min_shared_bands = max(min_shared_bands, 2)
-            # graduated: still over budget at the SCALE cap → XSCALE tier
-            # (the 10M-leg lesson — see adaptive.enforce_pair_budget)
-            mf2 = F.least(F.count(F.lit(1)), F.lit(int(max_bucket_size)))
-            f2 = f_bands.groupBy("band", "band_key").agg(mf2.alias("mf"))
-            if t_bands is None:
-                still = int(
-                    f2.agg(F.coalesce(
-                        F.sum(F.col("mf") * (F.col("mf") - 1) / 2),
-                        F.lit(0.0),
-                    )).collect()[0][0]
-                )
-            else:
-                t2 = t_bands.groupBy("band", "band_key").agg(
-                    mf2.alias("mt")
-                )
-                still = int(
-                    f2.join(t2, ["band", "band_key"])
-                    .agg(F.coalesce(
-                        F.sum(F.col("mf") * F.col("mt")), F.lit(0.0)
-                    )).collect()[0][0]
-                )
-            if still > pair_budget:
-                max_bucket_size = min(
-                    XSCALE_KNOBS["max_bucket_size"], max_bucket_size
-                )
-                min_shared_bands = max(
-                    min_shared_bands, XSCALE_KNOBS["min_shared_bands"]
-                )
+        knobs = enforce_pair_budget(
+            f_bands,
+            {"max_bucket_size": max_bucket_size,
+             "min_shared_bands": min_shared_bands},
+            pair_budget, budget_stats, to_bands=t_bands,
+        )
+        max_bucket_size = knobs["max_bucket_size"]
+        min_shared_bands = knobs["min_shared_bands"]
         if budget_stats is not None:
             budget_stats.update(
-                measured_pairs=measured, pair_budget=pair_budget,
-                demoted=demoted, max_bucket_size=max_bucket_size,
+                measured_pairs=budget_stats["capped_pairs_at_resolved"],
+                max_bucket_size=max_bucket_size,
                 min_shared_bands=min_shared_bands,
             )
     return candidates_from_bands(

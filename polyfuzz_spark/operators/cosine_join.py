@@ -12,13 +12,12 @@ aggregation is map-side combinable, and the whole plan stays in
 whole-stage codegen — no UDF anywhere.
 
 Scale note: common terms (e.g. license-header trigrams at code scale) make
-this join quadratic on hot keys. Above a size switch the pipeline swaps to
-blocked candidate generation (operators/blocking.py: MinHash bands → salted
-equi-join) and scores only candidates via ``cosine_for_candidates``.
-``max_df`` offers an additional guard: terms present in more than that
-fraction of documents contribute negligible IDF weight but dominate join
-fan-out, so the candidate-generation join may drop them (exact scoring then
-re-adds them via cosine_for_candidates).
+this join quadratic on hot keys. Above a size switch the callers swap to
+blocked candidate generation (MinHash bands → capped banded equi-join) and
+score only the candidates with ``score_candidates_packed`` over packed
+map-side vectors (``mapside.vectorize_packed_mapside``) — the one scorer
+the ER pipeline, the facade's blocked branch and the adaptive dispatchers
+share.
 """
 
 from __future__ import annotations
@@ -109,55 +108,17 @@ def sparse_cosine_pairs(
     return pairs
 
 
-def cosine_for_candidates(
-    candidates: DataFrame,
-    from_vec: DataFrame,
-    to_vec: DataFrame,
-) -> DataFrame:
-    """Exact cosine for a pre-blocked candidate set (from_id, to_id).
-
-    Used by the LSH path: candidates come from banded MinHash buckets;
-    scoring re-joins the full vectors so the score is exact even though
-    candidate generation was approximate.
-
-    Shape: each doc's sparse vector is PACKED once into aligned
-    (term-hash, weight) arrays sorted by hash, candidates join two packed
-    rows (a |cands|-row shuffle, not a |cands|×|terms| term-join fan-out),
-    and an Arrow-batched kernel merge-intersects the sorted arrays. Term
-    identity uses xxhash64(term) — a 64-bit space makes a cross-term
-    collision within one document pair astronomically unlikely (~|vocab|²
-    /2⁶⁴), and weights are unchanged, so scores are exact.
-    """
-    def pack(vec: DataFrame) -> DataFrame:
-        return (
-            vec.select(
-                "doc_id", F.xxhash64("term").alias("th"),
-                F.col("weight").alias("w"),
-            )
-            .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list(F.struct("th", "w"))).alias("p"))
-            .select(
-                "doc_id",
-                F.transform("p", lambda x: x["th"]).alias("t"),
-                F.transform("p", lambda x: x["w"]).alias("w"),
-            )
-        )
-
-    from_packed = pack(from_vec)
-    to_packed = from_packed if to_vec is from_vec else pack(to_vec)
-    return score_candidates_packed(candidates, from_packed, to_packed)
-
-
 def score_candidates_packed(
     candidates: DataFrame,
     from_packed: DataFrame,
     to_packed: DataFrame,
 ) -> DataFrame:
     """(from_id, to_id, sim) — exact sparse dot for candidate pairs over
-    PACKED vectors (doc_id, t: array<bigint> sorted, w: array<double>), the
-    tfidf.vectorize_packed output. Candidates join two packed rows (a
+    PACKED vectors (doc_id, t: array<int> sorted, w: array<double>), the
+    ``mapside.vectorize_packed_mapside`` output of ONE model (shared
+    vocab ids on both sides). Candidates join two packed rows (a
     |cands|-row shuffle) and an Arrow kernel merge-intersects the sorted
-    hash arrays — no |cands|×|terms| fan-out anywhere."""
+    id arrays — no |cands|×|terms| fan-out anywhere."""
     from collections.abc import Iterator
 
     import numpy as np

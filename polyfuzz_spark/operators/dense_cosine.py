@@ -18,11 +18,15 @@ identical for x ≥ 0 to the relational two-step floor(round(x,3)*1000+0.5)
 INSIDE the kernel and ranked by (milli desc, to_id asc) — bit-identical to
 the engine's relational top-k and to the DuckDB oracles.
 
+TF-IDF input is the packed map-side vector (``mapside.
+vectorize_packed_mapside``: sorted dense vocab ids + weights), scattered
+straight into the matmul rows.
+
 SIZE GATE: every function here materializes the *to-side only* on the
 driver for the broadcast, so each one is gated on an explicit doc-count ×
 dim byte budget (``fits_broadcast``). Over budget they refuse (TF-IDF —
-callers route through ``operators.adaptive.tfidf_selfmatch_topk``'s blocked
-LSH path) or degrade to the LSH-bucketed approximate path (embeddings →
+callers route through ``operators.adaptive``'s blocked LSH paths) or
+degrade to the LSH-bucketed approximate path (embeddings →
 ``knn.lsh_cosine_topk``). No unbounded driver collect remains.
 """
 
@@ -195,21 +199,6 @@ def _spread(df: DataFrame, n_rows: int) -> DataFrame:
     return df.repartition(n_part)
 
 
-def _dense_rows(vec: DataFrame, term_ids: DataFrame) -> DataFrame:
-    """(doc_id, tids: array<int>, ws: array<double>) — aligned sparse pairs,
-    deterministic order via sort_array on the (tid, weight) structs."""
-    pairs = (
-        vec.join(F.broadcast(term_ids), "term")
-        .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("tid", "weight"))).alias("p"))
-    )
-    return pairs.select(
-        "doc_id",
-        F.transform("p", lambda x: x["tid"]).alias("tids"),
-        F.transform("p", lambda x: x["weight"]).alias("ws"),
-    )
-
-
 def _topk_batches(
     bc_ids, bc_mat, k: int, min_milli: int, exclude_self: bool
 ):
@@ -225,7 +214,7 @@ def _topk_batches(
             M = np.zeros((n, to_mat.shape[1]))
             from_ids = pdf["doc_id"].to_numpy()
             f_cmp = _q_cmp(from_ids, lookup)
-            for i, (tids, ws) in enumerate(zip(pdf["tids"], pdf["ws"])):
+            for i, (tids, ws) in enumerate(zip(pdf["t"], pdf["w"])):
                 M[i, np.asarray(tids, dtype=np.int64)] = np.asarray(ws)
             sims = M @ to_mat.T
             # half-up milli quantization (== floor(round(x,3)*1000+0.5) for
@@ -255,80 +244,6 @@ def _topk_batches(
     return gen
 
 
-def tfidf_dense_topk(
-    from_vec: DataFrame,
-    to_vec: DataFrame,
-    top_n: int = 1,
-    min_similarity: float = 0.0,
-    exclude_self: bool = False,
-) -> DataFrame:
-    """(from_id, to_id, sim_milli, rnk) — exact TF-IDF cosine top-n via
-    broadcast matmul. ``to_vec`` must be broadcast-sized (n_to × |vocab|
-    doubles, enforced via ``fits_broadcast``); ``from_vec`` streams. Inputs
-    are (doc_id, term, weight) L2-normalized sparse vectors
-    (operators/tfidf.vectorize output)."""
-    spark = from_vec.sparkSession
-    # gate FIRST with count jobs — the vocab collect below must never run
-    # on an over-budget input (collect-then-check would OOM the driver
-    # before the check)
-    all_terms = (
-        to_vec.select("term").union(from_vec.select("term")).distinct()
-    )
-    dim = all_terms.count()
-    n_to = to_vec.select("doc_id").distinct().count()
-    if not fits_broadcast(n_to, dim) or not fits_broadcast(dim, 1):
-        raise ValueError(
-            f"to-side ({n_to} docs x {dim} terms) exceeds the dense "
-            "broadcast budget; use the blocked path "
-            "(operators.adaptive.tfidf_selfmatch_topk / blocking + "
-            "score_candidates_packed)"
-        )
-    # vocab is now budget-bounded → driver-side sorted enumeration (a
-    # global row_number window here would funnel every term through one
-    # partition)
-    terms = sorted(r["term"] for r in all_terms.collect())
-    term_ids = spark.createDataFrame(
-        [(t, i) for i, t in enumerate(terms)], "term string, tid int"
-    )
-    to_rows = _dense_rows(to_vec, term_ids).collect()
-    codec = _id_codec([r["doc_id"] for r in to_rows])
-    to_mat = np.zeros((len(to_rows), dim))
-    for i, r in enumerate(to_rows):
-        to_mat[i, np.asarray(r["tids"], dtype=np.int64)] = np.asarray(r["ws"])
-    sc = spark.sparkContext
-    bc_ids, bc_mat = sc.broadcast(codec), sc.broadcast(to_mat)
-    min_milli = int(np.floor(round(min_similarity, 3) * 1000 + 0.5)) if (
-        min_similarity > 0
-    ) else 0
-    from ..functions.ids import id_type
-
-    return _spread(_dense_rows(from_vec, term_ids), n_to).mapInPandas(
-        _topk_batches(bc_ids, bc_mat, top_n, min_milli, exclude_self),
-        schema=_out_schema(id_type(from_vec, "doc_id")),
-    )
-
-
-def tfidf_dense_topk_packed(
-    packed: DataFrame,
-    dim: int,
-    top_n: int = 1,
-    min_similarity: float = 0.0,
-    exclude_self: bool = False,
-    n_docs: int | None = None,
-) -> DataFrame:
-    """Self-match dense top-n over PACKED vectors (doc_id, t: array<int>
-    dense vocab ids, w: array<double>) — the mapside-vectorizer output.
-    Same kernel and output contract as ``tfidf_dense_topk`` without the
-    relational term-row detour (one BOUNDED collect builds the corpus
-    matrix: callers over the ``fits_broadcast`` budget are refused and must
-    take ``operators.adaptive.tfidf_selfmatch_topk``'s blocked path).
-    ``n_docs``: pre-computed row count (skips the extra count job)."""
-    return tfidf_dense_topk_packed_two(
-        packed, packed, dim, top_n=top_n, min_similarity=min_similarity,
-        exclude_self=exclude_self, n_to=n_docs,
-    )
-
-
 def tfidf_dense_topk_packed_two(
     from_packed: DataFrame,
     to_packed: DataFrame,
@@ -338,11 +253,16 @@ def tfidf_dense_topk_packed_two(
     exclude_self: bool = False,
     n_to: int | None = None,
 ) -> DataFrame:
-    """Two-list dense top-n over PACKED vectors: the TO-side is collected
-    into the broadcast matrix (bounded by ``fits_broadcast``), the
-    from-side streams through the batch-matmul kernel — the transform-time
-    twin of ``tfidf_dense_topk_packed``. Both sides MUST come from the
-    same model's ``vectorize_packed_mapside`` (shared dense vocab ids)."""
+    """(from_id, to_id, sim_milli, rnk) — exact TF-IDF cosine top-n over
+    PACKED vectors (doc_id, t: array<int> dense vocab ids, w:
+    array<double>). The TO-side is collected into the broadcast matrix
+    (ONE bounded collect: over the ``fits_broadcast`` budget the call is
+    refused and callers take ``operators.adaptive``'s blocked path), the
+    from-side streams through the batch-matmul kernel. Both sides MUST
+    come from the same model's ``vectorize_packed_mapside`` (shared dense
+    vocab ids); a self-match passes one frame twice with
+    ``exclude_self=True``. ``n_to``: pre-computed to-side row count
+    (skips the count job)."""
     spark = to_packed.sparkSession
     if n_to is None:
         n_to = to_packed.count()
@@ -364,15 +284,9 @@ def tfidf_dense_topk_packed_two(
     min_milli = int(np.floor(round(min_similarity, 3) * 1000 + 0.5)) if (
         min_similarity > 0
     ) else 0
-    renamed = _spread(
-        from_packed.select(
-            "doc_id", F.col("t").alias("tids"), F.col("w").alias("ws")
-        ),
-        n_to,
-    )
     from ..functions.ids import id_type
 
-    return renamed.mapInPandas(
+    return _spread(from_packed.select("doc_id", "t", "w"), n_to).mapInPandas(
         _topk_batches(bc_ids, bc_mat, top_n, min_milli, exclude_self),
         schema=_out_schema(id_type(from_packed, "doc_id")),
     )

@@ -7,14 +7,16 @@ groups just to count term frequencies, and the JVM MinHash computes 64
 string hashes per exploded gram row (3.2B hashes). Both are per-document
 pure functions of the content, so they belong on the map side:
 
-* ``fit_idf_light`` — document frequency via distinct-grams → a 10k-row
-  groupBy(term) (map-side combinable, tiny shuffle). Exact same IDF values
-  as the reference formula.
+* ``fit_idf_mapside`` — document frequency counted per Arrow batch over
+  distinct grams; the shuffle carries one partial (term, df) table per
+  batch into a |vocab|-row groupBy(term). Exact same IDF values as the
+  reference formula.
 * ``vectorize_packed_mapside`` — broadcast {term → (tid, idf)}; each Arrow
   batch cleans, shingles, counts, weights and L2-normalizes ALL its
   documents at once in numpy (``_iter_gram_windows`` + one lexsort).
-  Output: packed (doc_id, t: array<bigint>, w) rows — the ONLY thing that
-  ever shuffles. Feeds ``score_candidates_packed``.
+  Output: packed (doc_id, t: array<int> dense vocab ids, w) rows — the
+  ONLY thing that ever shuffles. Feeds ``score_candidates_packed`` and the
+  dense ``tfidf_dense_topk_packed_two`` kernel.
 * ``minhash_bands_mapside`` — n-grams (n ≤ 8 chars) pack EXACTLY into
   uint64 (no hash collisions at all); num_hashes affine maps
   ``a_i · g + b_i`` over 2⁶⁴ (multiply-shift family, odd ``a_i``) give the
@@ -38,41 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.ids import id_series, id_type
-from ..functions.ngrams import char_ngrams
-from ..functions.normalize import clean_string
 from ..partitioning import ensure_min_partitions
 from .tfidf import TfidfConfig, TfidfModel
-
-
-def fit_idf_light(docs: DataFrame, key_col: str = "key",
-                  cfg: TfidfConfig | None = None,
-                  id_col: str = "doc_id") -> TfidfModel:
-    """TfidfModel with the identical smooth-IDF values as ``fit_tfidf`` but
-    without materializing per-(doc, term) counts: df(t) needs only DISTINCT
-    grams per doc, so the aggregation output is |vocab| rows, not |docs|×
-    |terms| — the shuffle is map-side combined down to the vocabulary."""
-    cfg = cfg or TfidfConfig()
-    n_docs = docs.count()
-    key = clean_string(key_col) if cfg.clean_string else F.col(key_col)
-    cleaned = docs.select(F.col(id_col).alias("doc_id"), key.alias("_k"))
-    grams = char_ngrams(
-        F.col("_k"), cfg.n_gram_range[0], cfg.n_gram_range[1],
-        cfg.remove_space_ngrams,
-    )
-    idf = (
-        cleaned.select(F.explode(F.array_distinct(grams)).alias("term"))
-        .groupBy("term")
-        .agg(
-            (
-                F.log(
-                    (F.lit(1.0) + F.lit(float(n_docs)))
-                    / (F.lit(1.0) + F.count(F.lit(1)))
-                )
-                + F.lit(1.0)
-            ).alias("idf")
-        )
-    )
-    return TfidfModel(idf=idf, n_docs=n_docs, config=cfg)
 
 
 # Cache blocking for the fit/minhash gram kernels — same mechanism and

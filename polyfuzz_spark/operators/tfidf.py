@@ -204,34 +204,3 @@ def vectorize(model: TfidfModel, docs: DataFrame, key_col: str = "key",
     )
     norm = F.sqrt(F.sum(F.col("w") * F.col("w")).over(Window.partitionBy("doc_id")))
     return w.select("doc_id", "term", (F.col("w") / norm).alias("weight"))
-
-
-def vectorize_packed(model: TfidfModel, docs: DataFrame, key_col: str = "key",
-                     id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, t: array<bigint>, w: array<double>) — packed L2-normalized
-    TF-IDF vectors, term identity hashed to 64 bits, arrays sorted by hash.
-
-    The scale path for candidate scoring: ONE groupBy(doc_id) packs the
-    vector AND computes the L2 norm as a JVM array-aggregate over the
-    collected list — no per-doc window sort over the (doc, term) rows and
-    no separate packing pass (measured: the window-norm + repack pipeline
-    was the scaling bottleneck at 36M term rows)."""
-    tf = doc_terms(docs, key_col, model.config, id_col)
-    w = tf.join(model.idf, "term").select(
-        "doc_id",
-        F.xxhash64("term").alias("th"),
-        (F.col("tf") * F.col("idf")).alias("w"),
-    )
-    # the norm is a second plain aggregate in the SAME groupBy (computed
-    # during the hash agg, map-side combinable) — NOT an array-aggregate in
-    # a downstream projection, which CollapseProject would inline into the
-    # transform lambda and re-run per element (no CSE into HOF lambdas)
-    packed = w.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("th", "w"))).alias("p"),
-        F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"),
-    )
-    return packed.select(
-        "doc_id",
-        F.transform("p", lambda x: x["th"]).alias("t"),
-        F.transform("p", lambda x: x["w"] / F.col("nrm")).alias("w"),
-    )

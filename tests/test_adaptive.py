@@ -183,7 +183,6 @@ def test_dense_entrypoints_refuse_over_budget(spark, monkeypatch):
         fit_idf_mapside,
         vectorize_packed_mapside,
     )
-    from polyfuzz_spark.operators.tfidf import vectorize
 
     docs = spark.createDataFrame(
         [(i, f"string number {i}") for i in range(20)], "doc_id long, key string"
@@ -192,10 +191,9 @@ def test_dense_entrypoints_refuse_over_budget(spark, monkeypatch):
     packed = vectorize_packed_mapside(model, docs, "key")
     monkeypatch.setattr(dense_cosine, "BROADCAST_MAX_DOCS", 0)
     with pytest.raises(ValueError, match="broadcast budget"):
-        dense_cosine.tfidf_dense_topk_packed(packed, model.idf.count())
-    vec = vectorize(model, docs, "key")
-    with pytest.raises(ValueError, match="broadcast budget"):
-        dense_cosine.tfidf_dense_topk(vec, vec)
+        dense_cosine.tfidf_dense_topk_packed_two(
+            packed, packed, model.idf.count()
+        )
 
 
 def test_tfidf_transform_blocked_path_fires_and_scores_exact(

@@ -1,13 +1,14 @@
 """Streaming surface: the incremental matcher must produce identical rows on
 a batch DataFrame, a streaming DataFrame (file source, availableNow), and
-the relational dense scorer — Spark's unified batch/streaming contract plus
-fit/transform parity (reference polyfuzz.py:209-242 semantics)."""
+the packed dense transform scorer — Spark's unified batch/streaming
+contract plus fit/transform parity (reference polyfuzz.py:209-242
+semantics)."""
 
 import pandas as pd
 import pytest
 
 from polyfuzz_spark.api import lists_to_df
-from polyfuzz_spark.operators.dense_cosine import tfidf_dense_topk
+from polyfuzz_spark.operators.adaptive import tfidf_transform_topk
 from polyfuzz_spark.operators.tfidf import fit_tfidf, vectorize
 from polyfuzz_spark.streaming.incremental import (
     build_index,
@@ -16,12 +17,12 @@ from polyfuzz_spark.streaming.incremental import (
 )
 
 NEW_DOCS = ["apple", "appl", "aple pie", "mouse", "zzz qqq", "similarity"]
+CORPUS = ["apple", "apples", "mouse", "house", "recall", "similar"]
 
 
 @pytest.fixture(scope="module")
 def fitted(spark, request):
-    corpus = ["apple", "apples", "mouse", "house", "recall", "similar"]
-    to_df = lists_to_df(spark, corpus)
+    to_df = lists_to_df(spark, CORPUS)
     model = fit_tfidf(to_df, "key")
     to_vec = vectorize(model, to_df, "key")
     return model, to_vec, build_index(model, to_vec)
@@ -40,9 +41,12 @@ def test_batch_matches_dense_scorer(spark, fitted):
     model, to_vec, index = fitted
     from_df = lists_to_df(spark, NEW_DOCS)
     got = incremental_match(from_df, index, top_n=2, min_similarity=0.2)
-    # reference path: vectorize with the FITTED model (transform semantics)
-    from_vec = vectorize(model, from_df, "key")
-    exp = tfidf_dense_topk(from_vec, to_vec, top_n=2, min_similarity=0.2)
+    # reference path: the packed dense transform kernel with the FITTED
+    # model (transform semantics), a separate implementation
+    exp = tfidf_transform_topk(
+        model, from_df, lists_to_df(spark, CORPUS), top_n=2,
+        min_similarity=0.2,
+    )
     g, e = _canon(got.toPandas()), _canon(exp.toPandas())
     pd.testing.assert_frame_equal(g, e)
     # "zzz qqq" shares no trigram with the corpus → no rows for it
