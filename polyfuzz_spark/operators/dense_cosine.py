@@ -12,11 +12,11 @@ whenever the vocabulary is small or postings are long (hot-term fan-out
 makes the term join quadratic; a 5k-doc corpus with 75 distinct trigrams
 produces a 1.1-billion-row join but a 5000×75 matmul).
 
-Scores are quantized to integer milli-units (half-up: floor(x*1000+0.5),
-identical for x ≥ 0 to the relational two-step floor(round(x,3)*1000+0.5)
-— the 0.5 slack absorbs the ~1e-13 representation wobble of the /1000 step)
-INSIDE the kernel and ranked by (milli desc, to_id asc) — bit-identical to
-the engine's relational top-k and to the DuckDB oracles.
+Scores are quantized INSIDE the kernel to integer milli-units by the one
+half-up quantizer ``to_milli`` and ranked by the one per-row ranker
+``topk_milli`` (milli desc, to_id asc) — bit-identical to the engine's
+relational top-k and to the DuckDB oracles. The streaming serving index
+(``streaming/incremental.py``) calls both instead of keeping its own.
 
 TF-IDF input is the packed map-side vector (``mapside.
 vectorize_packed_mapside``: sorted dense vocab ids + weights), scattered
@@ -136,7 +136,7 @@ def _assert_surrogate_injective(mp: DataFrame, surr_col: str, side: str):
         )
 
 
-def _lsh_topk_struct_bridged(
+def _lsh_topk(
     queries: DataFrame,
     corpus: DataFrame,
     *,
@@ -147,15 +147,20 @@ def _lsh_topk_struct_bridged(
     exclude_self: bool,
     lsh_conf: dict | None,
 ) -> DataFrame:
-    """LSH top-k for STRUCT-id inputs: the ANN kernels need scalar ids, so
-    bridge the 128-bit struct through a 64-bit surrogate
-    (``_surrogate_expr``), run ``knn.lsh_cosine_topk``, and join the
+    """The embedding kernels' over-budget path, ``knn.lsh_cosine_topk``.
+    The ANN kernels need scalar ids, so STRUCT ids bridge the 128-bit
+    struct through a 64-bit surrogate (``_surrogate_expr``) and join the
     original struct ids back on. The surrogate maps are guarded injective
     (``_assert_surrogate_injective``) so a collision raises instead of
     silently fanning out the restore join. The EXACT dense paths never do
     this — they carry the full id through the codec."""
     from .knn import lsh_cosine_topk
 
+    if corpus.schema[id_col].dataType.typeName() != "struct":
+        return lsh_cosine_topk(
+            queries, corpus, k=k, dim=dim, id_col=id_col, vec_col=vec_col,
+            exclude_self=exclude_self, **(lsh_conf or {}),
+        )
     q2 = queries.select(_surrogate_expr(id_col).alias(id_col), F.col(vec_col))
     c2 = (
         q2
@@ -199,6 +204,53 @@ def _spread(df: DataFrame, n_rows: int) -> DataFrame:
     return df.repartition(n_part)
 
 
+def to_milli(x):
+    """Half-up integer milli-units, ``floor(x * 1000 + 0.5)`` — the one
+    score quantizer of the dense and serving kernels, applied to scores
+    and thresholds alike. For x ≥ 0 it equals the relational two-step
+    ``floor(round(x, 3) * 1000 + 0.5)`` (Spark rounds half-up; the 0.5
+    slack absorbs the ~1e-13 wobble of the /1000 step). numpy's and
+    Python's round are half-to-even and must never enter: an exact cosine
+    of 0.3125 is 313, not 312."""
+    return np.floor(np.asarray(x, dtype=np.float64) * 1000 + 0.5).astype(
+        np.int64
+    )
+
+
+def topk_milli(
+    milli: np.ndarray, to_cmp: np.ndarray, k: int, min_milli: int,
+    q_cmp: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one per-row top-k of the dense and serving kernels. For each row
+    i of an (n_q, n_to) milli matrix: the columns with milli ≥
+    ``min_milli``, minus the column whose id equals ``q_cmp[i]`` when
+    ``q_cmp`` is given (self-exclusion), ranked (milli desc, to_cmp asc) —
+    the relational window's and the DuckDB oracles' tie-break (rank order
+    == id order for struct ids, see _id_codec) — cut to k. Returns flat
+    ``(row, col, rnk)`` int arrays, rnk 1-based."""
+    rows, cols = [], []
+    for i, row in enumerate(milli):
+        keep = row >= min_milli
+        if q_cmp is not None:
+            keep &= to_cmp != q_cmp[i]
+        ok = np.nonzero(keep)[0]
+        cols.append(ok[np.lexsort((to_cmp[ok], -row[ok]))][:k])
+        rows.append(np.full(cols[-1].size, i, dtype=np.int64))
+    if not rows:
+        return (np.empty(0, dtype=np.int64),) * 3
+    rnk = np.concatenate([np.arange(1, c.size + 1) for c in cols])
+    return np.concatenate(rows), np.concatenate(cols), rnk
+
+
+def scatter_rows(ts, ws, dim: int) -> np.ndarray:
+    """(len(ts), dim) dense float64 matrix of packed TF-IDF vectors (sorted
+    dense vocab ids ``t`` + weights ``w`` per row)."""
+    M = np.zeros((len(ts), dim))
+    for i, (t, w) in enumerate(zip(ts, ws)):
+        M[i, np.asarray(t, dtype=np.int64)] = np.asarray(w, dtype=np.float64)
+    return M
+
+
 def _topk_batches(
     bc_ids, bc_mat, k: int, min_milli: int, exclude_self: bool
 ):
@@ -210,35 +262,16 @@ def _topk_batches(
         for pdf in batches:
             if not len(pdf):
                 continue
-            n = len(pdf)
-            M = np.zeros((n, to_mat.shape[1]))
             from_ids = pdf["doc_id"].to_numpy()
-            f_cmp = _q_cmp(from_ids, lookup)
-            for i, (tids, ws) in enumerate(zip(pdf["t"], pdf["w"])):
-                M[i, np.asarray(tids, dtype=np.int64)] = np.asarray(ws)
-            sims = M @ to_mat.T
-            # half-up milli quantization (== floor(round(x,3)*1000+0.5) for
-            # x >= 0; explicit so numpy's banker's rounding never enters)
-            milli = np.floor(sims * 1000 + 0.5).astype(np.int64)
-            out_f, out_t, out_s, out_r = [], [], [], []
-            for i in range(n):
-                row = milli[i]
-                if exclude_self:
-                    row = np.where(to_cmp == f_cmp[i], -1, row)
-                ok = np.nonzero(row >= min_milli)[0]
-                if not len(ok):
-                    continue
-                # (milli desc, to_id asc) — identical tie-break to the
-                # relational window / DuckDB oracle (rank order == id
-                # order for struct ids, see _id_codec)
-                order = ok[np.lexsort((to_cmp[ok], -row[ok]))][:k]
-                out_f.extend([from_ids[i]] * len(order))
-                out_t.extend(to_emit[order])
-                out_s.extend(row[order])
-                out_r.extend(range(1, len(order) + 1))
+            M = scatter_rows(pdf["t"], pdf["w"], to_mat.shape[1])
+            milli = to_milli(M @ to_mat.T)
+            q, c, rnk = topk_milli(
+                milli, to_cmp, k, min_milli,
+                _q_cmp(from_ids, lookup) if exclude_self else None,
+            )
             yield pd.DataFrame(
-                {"from_id": out_f, "to_id": out_t, "sim_milli": out_s,
-                 "rnk": out_r}
+                {"from_id": from_ids[q], "to_id": to_emit[c],
+                 "sim_milli": milli[q, c], "rnk": rnk}
             )
 
     return gen
@@ -274,21 +307,50 @@ def tfidf_dense_topk_packed_two(
         )
     rows = to_packed.collect()
     codec = _id_codec([r["doc_id"] for r in rows])
-    to_mat = np.zeros((len(rows), dim))
-    for i, r in enumerate(rows):
-        to_mat[i, np.asarray(r["t"], dtype=np.int64)] = np.asarray(
-            r["w"], dtype=np.float64
-        )
+    to_mat = scatter_rows([r["t"] for r in rows], [r["w"] for r in rows], dim)
     sc = spark.sparkContext
     bc_ids, bc_mat = sc.broadcast(codec), sc.broadcast(to_mat)
-    min_milli = int(np.floor(round(min_similarity, 3) * 1000 + 0.5)) if (
-        min_similarity > 0
-    ) else 0
+    min_milli = int(to_milli(min_similarity))
     from ..functions.ids import id_type
 
     return _spread(from_packed.select("doc_id", "t", "w"), n_to).mapInPandas(
         _topk_batches(bc_ids, bc_mat, top_n, min_milli, exclude_self),
         schema=_out_schema(id_type(from_packed, "doc_id")),
+    )
+
+
+def _normed(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    vec = F.col(vec_col).cast("array<double>")
+    nrm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.transform(vec, lambda x: x / nrm).alias("v"),
+    )
+
+
+def _embedding_corpus(corpus: DataFrame, id_col: str, vec_col: str):
+    """The embedding kernels' one corpus step: ``(n, dim, broadcasts)``.
+
+    ONE stats job for the broadcast gate (count + dim together: these
+    small legs are scheduling-overhead-bound, every extra job is ~0.5 s).
+    Within the ``fits_broadcast`` budget, the L2-normalized corpus is
+    Arrow-collected (toPandas: ~an order of magnitude cheaper than Row
+    deserialization for the fixed-width vector matrix) and broadcast as
+    ``(bc_ids, bc_mat)`` with its id codec; over budget ``broadcasts`` is
+    None and nothing is collected."""
+    stats = corpus.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.first(F.size(F.col(vec_col))).alias("d"),
+    ).first()
+    n_corpus = int(stats["n"])
+    dim = int(stats["d"]) if stats["d"] is not None else 0
+    if not fits_broadcast(n_corpus, dim):
+        return n_corpus, dim, None
+    c_pdf = _normed(corpus, id_col, vec_col).toPandas()
+    sc = corpus.sparkSession.sparkContext
+    return n_corpus, dim, (
+        sc.broadcast(_id_codec(list(c_pdf["doc_id"]))),
+        sc.broadcast(np.array(c_pdf["v"].tolist())),
     )
 
 
@@ -309,35 +371,17 @@ def embedding_near_dup_pairs(
     candidates exactly re-scored and thresholded (recall < 1, the
     documented ANN tradeoff; precision stays 1 because scores are exact).
     """
-    spark = corpus.sparkSession
-    # ONE stats job for the broadcast gate (count + dim together): these
-    # small legs are scheduling-overhead-bound, every extra job is ~0.5 s
-    stats = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.first(F.size(F.col(vec_col))).alias("d"),
-    ).first()
-    n_corpus = int(stats["n"])
-    dim = int(stats["d"]) if stats["d"] is not None else 0
-    min_milli = int(round(threshold * 1000))
-    if not fits_broadcast(n_corpus, dim):
-        from .knn import lsh_cosine_topk
-
+    n_corpus, dim, bcs = _embedding_corpus(corpus, id_col, vec_col)
+    min_milli = int(to_milli(threshold))
+    if bcs is None:
         # LSH candidates with exact re-score ≥ threshold: reuse the bucketed
         # top-k machinery with k → corpus (every candidate above threshold
-        # survives the window), then threshold + orient the pair. Struct
-        # ids take the guarded 64-bit surrogate bridge (the ANN kernels
-        # need scalar ids); the pair orientation below works unchanged —
-        # Spark orders structs lexicographically by field.
-        if corpus.schema[id_col].dataType.typeName() == "struct":
-            topk = _lsh_topk_struct_bridged(
-                corpus, corpus, k=n_corpus, dim=dim, id_col=id_col,
-                vec_col=vec_col, exclude_self=True, lsh_conf=lsh_conf,
-            )
-        else:
-            topk = lsh_cosine_topk(
-                corpus, corpus, k=n_corpus, dim=dim, id_col=id_col,
-                vec_col=vec_col, exclude_self=True, **(lsh_conf or {}),
-            )
+        # survives the window), then threshold + orient the pair — Spark
+        # orders restored struct ids lexicographically by field.
+        topk = _lsh_topk(
+            corpus, corpus, k=n_corpus, dim=dim, id_col=id_col,
+            vec_col=vec_col, exclude_self=True, lsh_conf=lsh_conf,
+        )
         return (
             topk.where(
                 (F.col("cos_milli") >= min_milli)
@@ -349,22 +393,7 @@ def embedding_near_dup_pairs(
                 "cos_milli",
             )
         )
-
-    def normed(df: DataFrame) -> DataFrame:
-        vec = F.col(vec_col).cast("array<double>")
-        nrm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.transform(vec, lambda x: x / nrm).alias("v"),
-        )
-
-    # Arrow collect (toPandas): ~an order of magnitude cheaper than Row
-    # deserialization for the fixed-width vector matrix
-    c_pdf = normed(corpus).toPandas()
-    codec = _id_codec(list(c_pdf["doc_id"]))
-    to_mat = np.array(c_pdf["v"].tolist())
-    bc_ids = spark.sparkContext.broadcast(codec)
-    bc_mat = spark.sparkContext.broadcast(to_mat)
+    bc_ids, bc_mat = bcs
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         to_emit, to_cmp, lookup = bc_ids.value
@@ -375,7 +404,7 @@ def embedding_near_dup_pairs(
             q_ids = pdf["doc_id"].to_numpy()
             q_cmp = _q_cmp(q_ids, lookup)
             Q = np.array([np.asarray(v) for v in pdf["v"]])
-            milli = np.floor(Q @ mat.T * 1000 + 0.5).astype(np.int64)
+            milli = to_milli(Q @ mat.T)
             out_f, out_t, out_c = [], [], []
             for i in range(len(pdf)):
                 # orientation by the codec's total order (== id order for
@@ -394,7 +423,7 @@ def embedding_near_dup_pairs(
     from ..functions.ids import id_type
 
     id_ddl = id_type(corpus, id_col)
-    return _spread(normed(corpus), n_corpus).mapInPandas(
+    return _spread(_normed(corpus, id_col, vec_col), n_corpus).mapInPandas(
         gen, schema=f"from_id {id_ddl}, to_id {id_ddl}, cos_milli long"
     )
 
@@ -417,41 +446,13 @@ def embedding_dense_topk(
     (``knn.lsh_cosine_topk``, same output contract, recall < 1 by design —
     the documented 100 TB shape). ``lsh_conf`` tunes that fallback
     (n_planes/n_tables/seed)."""
-    spark = queries.sparkSession
-    # ONE stats job (count + dim) — see embedding_near_dup_pairs
-    stats = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.first(F.size(F.col(vec_col))).alias("d"),
-    ).first()
-    n_corpus = int(stats["n"])
-    dim = int(stats["d"]) if stats["d"] is not None else 0
-    if not fits_broadcast(n_corpus, dim):
-        from .knn import lsh_cosine_topk
-
-        if corpus.schema[id_col].dataType.typeName() == "struct":
-            return _lsh_topk_struct_bridged(
-                queries, corpus, k=k, dim=dim, id_col=id_col,
-                vec_col=vec_col, exclude_self=exclude_self,
-                lsh_conf=lsh_conf,
-            )
-        return lsh_cosine_topk(
+    n_corpus, dim, bcs = _embedding_corpus(corpus, id_col, vec_col)
+    if bcs is None:
+        return _lsh_topk(
             queries, corpus, k=k, dim=dim, id_col=id_col, vec_col=vec_col,
-            exclude_self=exclude_self, **(lsh_conf or {}),
+            exclude_self=exclude_self, lsh_conf=lsh_conf,
         )
-
-    def normed(df: DataFrame) -> DataFrame:
-        vec = F.col(vec_col).cast("array<double>")
-        nrm = F.sqrt(F.aggregate(vec, F.lit(0.0), lambda a, x: a + x * x))
-        return df.select(
-            F.col(id_col).alias("doc_id"),
-            F.transform(vec, lambda x: x / nrm).alias("v"),
-        )
-
-    c_pdf = normed(corpus).toPandas()  # Arrow collect, see near_dup twin
-    codec = _id_codec(list(c_pdf["doc_id"]))
-    to_mat = np.array(c_pdf["v"].tolist())
-    sc = spark.sparkContext
-    bc_ids, bc_mat = sc.broadcast(codec), sc.broadcast(to_mat)
+    bc_ids, bc_mat = bcs
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         to_emit, to_cmp, lookup = bc_ids.value
@@ -460,29 +461,23 @@ def embedding_dense_topk(
             if not len(pdf):
                 continue
             q_ids = pdf["doc_id"].to_numpy()
-            q_cmp = _q_cmp(q_ids, lookup)
             Q = np.array([np.asarray(v) for v in pdf["v"]])
-            milli = np.floor(Q @ mat.T * 1000 + 0.5).astype(np.int64)
-            out = {"query_id": [], "neighbor_id": [], "rank": [],
-                   "cos_milli": []}
-            for i in range(len(pdf)):
-                row = milli[i]
-                if exclude_self:
-                    # sentinel below any real milli-cosine (≥ -1000); NOT
-                    # int64.min, whose negation overflows in the sort key
-                    row = np.where(to_cmp == q_cmp[i], -(10 ** 9), row)
-                keep = np.nonzero(row > -(10 ** 9))[0]
-                order = keep[np.lexsort((to_cmp[keep], -row[keep]))][:k]
-                out["query_id"].extend([q_ids[i]] * len(order))
-                out["neighbor_id"].extend(to_emit[order])
-                out["rank"].extend(range(1, len(order) + 1))
-                out["cos_milli"].extend(row[order])
-            yield pd.DataFrame(out)
+            milli = to_milli(Q @ mat.T)
+            # every cosine is ≥ -1, so -1000 keeps all real scores and
+            # drops only a zero vector's NaN (int64.min after the cast)
+            q, c, rnk = topk_milli(
+                milli, to_cmp, k, -1000,
+                _q_cmp(q_ids, lookup) if exclude_self else None,
+            )
+            yield pd.DataFrame(
+                {"query_id": q_ids[q], "neighbor_id": to_emit[c],
+                 "rank": rnk, "cos_milli": milli[q, c]}
+            )
 
     from ..functions.ids import id_type
 
     id_ddl = id_type(queries, id_col)
-    return _spread(normed(queries), n_corpus).mapInPandas(
+    return _spread(_normed(queries, id_col, vec_col), n_corpus).mapInPandas(
         gen,
         schema=(
             f"query_id {id_ddl}, neighbor_id {id_ddl}, rank int, "

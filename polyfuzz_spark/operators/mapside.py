@@ -11,12 +11,15 @@ pure functions of the content, so they belong on the map side:
   distinct grams; the shuffle carries one partial (term, df) table per
   batch into a |vocab|-row groupBy(term). Exact same IDF values as the
   reference formula.
-* ``vectorize_packed_mapside`` — broadcast {term → (tid, idf)}; each Arrow
-  batch cleans, shingles, counts, weights and L2-normalizes ALL its
-  documents at once in numpy (``_iter_gram_windows`` + one lexsort).
-  Output: packed (doc_id, t: array<int> dense vocab ids, w) rows — the
-  ONLY thing that ever shuffles. Feeds ``score_candidates_packed`` and the
-  dense ``tfidf_dense_topk_packed_two`` kernel.
+* ``vectorize_packed_mapside`` — broadcast vocabulary table
+  (``vocab_table``); each Arrow batch cleans, shingles, counts, weights and
+  L2-normalizes ALL its documents at once in numpy (``vectorize_keys``:
+  ``_iter_gram_windows`` + one sort). Output: packed (doc_id, t:
+  array<int> dense vocab ids, w) rows — the ONLY thing that ever
+  shuffles. Feeds ``score_candidates_packed`` and the dense
+  ``tfidf_dense_topk_packed_two`` kernel. The streaming serving index
+  (``streaming/incremental.py``) vectorizes its queries with the same
+  two helpers.
 * ``minhash_bands_mapside`` — n-grams (n ≤ 8 chars) pack EXACTLY into
   uint64 (no hash collisions at all); num_hashes affine maps
   ``a_i · g + b_i`` over 2⁶⁴ (multiply-shift family, odd ``a_i``) give the
@@ -156,6 +159,116 @@ def fit_idf_mapside(docs: DataFrame, key_col: str = "key",
     return TfidfModel(idf=idf, n_docs=n_docs, config=cfg)
 
 
+def vocab_table(model: TfidfModel) -> tuple[dict, tuple | None]:
+    """The vectorizer's vocabulary, collected once from ``model.idf``:
+    ``({term: (tid, idf)}, vpack)``. tid is the term's rank in SORTED-TERM
+    order, the dense id every packed vector and serving index shares.
+
+    ``vpack`` is the batched kernel's lookup table: the vocab's exact u64
+    gram packings sorted for searchsorted, the tid and idf of each. It is
+    None (route every batch through the per-doc dict) unless every term
+    packs exactly, which needs cleaned text and n-grams of ≤ 8 chars."""
+    rows = sorted(model.idf.collect(), key=lambda r: r["term"])
+    vocab = {r["term"]: (i, r["idf"]) for i, r in enumerate(rows)}
+    cfg = model.config
+    if not (
+        cfg.clean_string
+        and cfg.n_gram_range[1] <= 8
+        and all(len(r["term"]) <= 8 for r in rows)
+    ):
+        return vocab, None
+    vkeys = _pack_grams_u64([r["term"] for r in rows])
+    vorder = np.argsort(vkeys)
+    return vocab, (
+        vkeys[vorder],
+        vorder.astype(np.int64),  # tid of the k-th smallest key
+        np.array([r["idf"] for r in rows], dtype=np.float64)[vorder],
+    )
+
+
+def vectorize_keys(
+    keys: list, vocab: dict, vpack: tuple | None, cfg: TfidfConfig,
+    slice_docs: int | None = None,
+) -> tuple[list, list, list]:
+    """One Arrow batch of keys → ``(kept, tids, weights)``: the row
+    positions of the keys with at least one in-vocabulary gram, and for
+    each its sorted int64 tids and L2-normalized float64 tf·idf weights.
+    Out-of-vocabulary grams drop before the norm (sklearn's transform).
+
+    The batched route (``vpack`` from ``vocab_table``) and the per-doc
+    dict fallback give bit-identical output: integer tf counts × idf, then
+    each doc's exact ``w @ w`` norm. ``slice_docs`` cache-blocks the
+    batched route (see VECTORIZER_SLICE_DOCS); docs are independent, so
+    it never changes the output."""
+    kept, ts, ws = [], [], []
+    if vpack is None:
+        from ..functions.pygrams import doc_grams_py
+
+        for i, key in enumerate(keys):
+            counts: dict[int, int] = {}
+            idfs: dict[int, float] = {}
+            for g in doc_grams_py(key or "", cfg):
+                hit = vocab.get(g)
+                if hit is not None:
+                    tid, idf = hit
+                    counts[tid] = counts.get(tid, 0) + 1
+                    idfs[tid] = idf
+            if not counts:
+                continue
+            tids = np.fromiter(counts.keys(), dtype=np.int64)
+            wts = np.fromiter(counts.values(), dtype=np.float64) * np.fromiter(
+                (idfs[t] for t in counts), dtype=np.float64
+            )
+            order = np.argsort(tids)
+            tids, wts = tids[order], wts[order]
+            wts /= np.sqrt(wts @ wts)
+            kept.append(i)
+            ts.append(tids)
+            ws.append(wts)
+        return kept, ts, ws
+    # whole-batch: flat gram array → vocab searchsorted → one stable sort
+    # on (doc, tid) → run-length tf counts × idf; only the per-doc L2 norm
+    # stays a loop (exact w@w dots)
+    vk, vtid, vidf = vpack
+    V = np.int64(vk.size)
+    step = slice_docs or len(keys) or 1
+    for lo in range(0, len(keys), step):
+        parts = list(_iter_gram_windows(keys[lo:lo + step], cfg))
+        if not parts:
+            continue
+        doc_of = np.concatenate([p[0] for p in parts])
+        g = np.concatenate([p[1] for p in parts])
+        pos = np.searchsorted(vk, g)
+        in_r = pos < vk.size
+        ok = in_r.copy()
+        ok[in_r] = vk[pos[in_r]] == g[in_r]
+        d, p = doc_of[ok], pos[ok]
+        key = d * V + vtid[p]
+        order = np.argsort(key, kind="stable")
+        ks, iv = key[order], vidf[p][order]
+        run = np.ones(ks.size, dtype=bool)
+        run[1:] = ks[1:] != ks[:-1]
+        starts = np.nonzero(run)[0]
+        if not starts.size:
+            continue
+        w_all = np.diff(np.append(starts, ks.size)).astype(np.float64) * (
+            iv[starts]
+        )
+        ku = ks[run]
+        tid_u = ku % V
+        d_u = ku // V
+        doc_run = np.ones(d_u.size, dtype=bool)
+        doc_run[1:] = d_u[1:] != d_u[:-1]
+        bounds = np.append(np.nonzero(doc_run)[0], d_u.size)
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            wts = w_all[a:b].copy()
+            wts /= np.sqrt(wts @ wts)
+            kept.append(lo + int(d_u[a]))
+            ts.append(tid_u[a:b])
+            ws.append(wts)
+    return kept, ts, ws
+
+
 # Intra-kernel cache blocking for the packed vectorizer: docs per slice
 # inside each Arrow batch (None = whole batch). At 32 concurrent Python
 # kernels the box's one shared L3 divides 32 ways, so the full-batch flat
@@ -178,9 +291,9 @@ def vectorize_packed_mapside(
 ) -> DataFrame:
     """(doc_id, t: array<int> sorted dense vocab ids, w: array<double>)
     packed L2-normalized TF-IDF vectors, built entirely map-side from a
-    broadcast vocabulary. ``t`` ids are consistent across every output of
-    the SAME model — both sides of ``score_candidates_packed`` must come
-    from one vectorizer family.
+    broadcast vocabulary (``vocab_table``) by ``vectorize_keys``. ``t``
+    ids are consistent across every output of the SAME model — both sides
+    of ``score_candidates_packed`` must come from one vectorizer family.
 
     ``compact=True`` shrinks weights to float32 (halves shuffle/cache
     bytes) — for the bench/pipeline path ONLY: the ~1e-7 relative weight
@@ -189,135 +302,37 @@ def vectorize_packed_mapside(
     must keep the default float64."""
     spark = docs.sparkSession
     id_ddl = id_type(docs, id_col)  # long / struct<h1,h2> / string — as fed
-    rows = sorted(model.idf.collect(), key=lambda r: r["term"])
-    vocab = {r["term"]: (i, r["idf"]) for i, r in enumerate(rows)}
-    cfg0 = model.config
-    # batched kernel precondition: every vocab term packs exactly into u64
-    # (tid stays the rank in SORTED-TERM order, so output is bit-identical)
-    batched = (
-        cfg0.clean_string
-        and cfg0.n_gram_range[1] <= 8
-        and all(len(r["term"]) <= 8 for r in rows)
-    )
-    if batched:
-        vkeys = _pack_grams_u64([r["term"] for r in rows])
-        vorder = np.argsort(vkeys)
-        vpack = (
-            vkeys[vorder],
-            vorder.astype(np.int64),  # tid of the k-th smallest key
-            np.array([r["idf"] for r in rows], dtype=np.float64)[vorder],
-        )
-    else:
-        vpack = None
+    vocab, vpack = vocab_table(model)
     bc = spark.sparkContext.broadcast(
         (vocab, model.config, compact, vpack, VECTORIZER_SLICE_DOCS)
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pygrams import doc_grams_py
-
         vocab_l, cfg, compact_l, vpack_l, slice_docs = bc.value
-
-        def out_pdf(ids, ts, ws):
+        for pdf in batches:
+            ids_all = pdf[id_col].to_numpy()
+            kept, ts, ws = vectorize_keys(
+                list(pdf[key_col]), vocab_l, vpack_l, cfg, slice_docs
+            )
             # explicit dtypes: a batch whose docs are ALL gram-less (or out
             # of vocabulary) yields zero rows, and pandas would type the
             # empty t/w columns float64 — Arrow then refuses the
             # float64→list<int> conversion (NumPyConverter) even at 0 rows.
             # id dtype follows the input id type (128-bit struct ids and
             # string keys ride as objects).
-            return pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    "doc_id": id_series(ids, id_ddl),
-                    "t": pd.Series(ts, dtype="object"),
-                    "w": pd.Series(ws, dtype="object"),
+                    "doc_id": id_series([ids_all[i] for i in kept], id_ddl),
+                    "t": pd.Series(
+                        [t.astype(np.int32) for t in ts], dtype="object"
+                    ),
+                    "w": pd.Series(
+                        [w.astype(np.float32) for w in ws] if compact_l
+                        else ws,
+                        dtype="object",
+                    ),
                 }
             )
-
-        for pdf in batches:
-            ids, ts, ws = [], [], []
-            if vpack_l is not None:
-                # whole-batch: flat gram array → vocab searchsorted → one
-                # stable sort on (doc, tid) → run-length tf counts × idf
-                # (exactly the relational path's tf*idf product, tfidf.py);
-                # only the per-doc L2 norm stays a loop (exact w@w dots).
-                # CACHE-BLOCKED: each Arrow batch is processed in
-                # ``slice_docs``-doc slices so the flat gram/sort arrays
-                # stay cache-resident — computations are per-doc
-                # independent, so output is bit-identical to the unsliced
-                # kernel (see VECTORIZER_SLICE_DOCS for the measurement).
-                vk, vtid, vidf = vpack_l
-                V = np.int64(vk.size)
-                keys_all = list(pdf[key_col])
-                ids_all = pdf[id_col].to_numpy()
-                step = slice_docs or len(keys_all) or 1
-                for lo in range(0, len(keys_all), step):
-                    parts = list(
-                        _iter_gram_windows(keys_all[lo:lo + step], cfg)
-                    )
-                    if not parts:
-                        continue
-                    doc_of = np.concatenate([p[0] for p in parts])
-                    g = np.concatenate([p[1] for p in parts])
-                    pos = np.searchsorted(vk, g)
-                    in_r = pos < vk.size
-                    ok = in_r.copy()
-                    ok[in_r] = vk[pos[in_r]] == g[in_r]
-                    d, p = doc_of[ok], pos[ok]
-                    tid, idfv = vtid[p], vidf[p]
-                    key = d * V + tid
-                    order = np.argsort(key, kind="stable")
-                    ks, iv = key[order], idfv[order]
-                    run = np.ones(ks.size, dtype=bool)
-                    run[1:] = ks[1:] != ks[:-1]
-                    starts = np.nonzero(run)[0]
-                    if starts.size:
-                        cnt = np.diff(np.append(starts, ks.size))
-                        w_all = cnt.astype(np.float64) * iv[starts]
-                        ku = ks[run]
-                        tid_u = ku % V
-                        d_u = ku // V
-                        doc_run = np.ones(d_u.size, dtype=bool)
-                        doc_run[1:] = d_u[1:] != d_u[:-1]
-                        bounds = np.append(
-                            np.nonzero(doc_run)[0], d_u.size
-                        )
-                        ids_np = ids_all[lo:lo + step]
-                        for a, b in zip(bounds[:-1], bounds[1:]):
-                            wts = w_all[a:b].copy()
-                            wts /= np.sqrt(wts @ wts)
-                            ids.append(ids_np[d_u[a]])
-                            ts.append(tid_u[a:b].astype(np.int32))
-                            ws.append(
-                                wts.astype(np.float32) if compact_l else wts
-                            )
-                yield out_pdf(ids, ts, ws)
-                continue
-            for did, key in zip(pdf[id_col], pdf[key_col]):
-                # integer tf counts × idf — same product as the relational
-                # path (tfidf.py tf*idf) and the batched kernel above
-                counts: dict[int, int] = {}
-                idfs: dict[int, float] = {}
-                for g in doc_grams_py(key or "", cfg):
-                    hit = vocab_l.get(g)
-                    if hit is not None:
-                        tid, idf = hit
-                        counts[tid] = counts.get(tid, 0) + 1
-                        idfs[tid] = idf
-                if not counts:
-                    continue
-                tids = np.fromiter(counts.keys(), dtype=np.int64)
-                wts = np.fromiter(
-                    counts.values(), dtype=np.float64
-                ) * np.fromiter(
-                    (idfs[t] for t in counts), dtype=np.float64
-                )
-                order = np.argsort(tids)
-                tids, wts = tids[order], wts[order]
-                wts /= np.sqrt(wts @ wts)
-                ids.append(did)
-                ts.append(tids.astype(np.int32))
-                ws.append(wts.astype(np.float32) if compact_l else wts)
-            yield out_pdf(ids, ts, ws)
 
     w_type = "float" if compact else "double"
     return ensure_min_partitions(docs.select(id_col, key_col)).mapInPandas(
@@ -575,9 +590,6 @@ def both_orientations(pairs: DataFrame, carry: tuple = ()) -> DataFrame:
     return pairs.select(both.alias("p")).select(
         "p.from_id", "p.to_id", *[f"p.{c}" for c in carry]
     )
-
-
-_both_orientations = both_orientations  # internal alias kept for callers
 
 
 def _salted_sides(

@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """A quarter of physical memory (the JVM's own default heap share),
+    capped at 48g. A fixed 48g let G1 grow a long-lived local driver past
+    physical memory on a small host (the live set stays small) until the
+    kernel killed it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 4, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "polyfuzz_spark",
     cpus: int | None = None,
@@ -46,7 +55,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # single-node shuffle I/O is a local-mode artifact (one disk shared
         # by all "executors"); tmpfs keeps the scaling benchmark CPU-bound,

@@ -7,18 +7,20 @@ The reference has no streaming semantics (SURVEY.md §2.9); this is a
 deliberate engine extension: at ingest scale new files arrive continuously
 and must be matched against the already-resolved corpus without refitting.
 
-Design: the fitted state (vocabulary ids, IDF vector, L2-normalized corpus
-matrix) is broadcast once; each incoming Arrow batch is cleaned, shingled,
-vectorized and scored with one BLAS matmul entirely inside ``mapInPandas``.
-No shuffle, no stateful operator, no watermark needed — the stage is a pure
+Design: the fitted state (the map-side vocabulary table, IDF vector,
+L2-normalized corpus matrix) is broadcast once; each incoming Arrow batch
+is scored with one BLAS matmul entirely inside ``mapInPandas``. No
+shuffle, no stateful operator, no watermark needed — the stage is a pure
 per-batch map, so the SAME code runs on a batch DataFrame and a streaming
 DataFrame (Spark's unified batch/streaming contract), and stream output ==
 batch output row-for-row (tested).
 
-The Python-side clean + n-gram steps replicate operators P1/P2 exactly
-(functions/normalize.py, functions/ngrams.py); transform drops
-out-of-vocabulary terms BEFORE normalization, matching sklearn and the
-reference's ``re_train=False`` path.
+Serving keeps no kernel of its own. Queries vectorize through the map-side
+kernel (``mapside.vectorize_keys``, the one behind every packed TF-IDF
+vector: clean, shingle, drop out-of-vocabulary terms BEFORE the norm as
+sklearn and the reference's ``re_train=False`` path do), and scores go
+through the dense kernels' half-up quantizer and top-k ranker
+(``dense_cosine.to_milli`` / ``topk_milli``).
 """
 
 from __future__ import annotations
@@ -31,8 +33,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.pygrams import clean_py as _clean_py
-from ..functions.pygrams import grams_py as _grams_py
+from ..operators.dense_cosine import (
+    fits_broadcast,
+    scatter_rows,
+    to_milli,
+    topk_milli,
+)
+from ..operators.mapside import vectorize_keys, vocab_table
 from ..operators.tfidf import TfidfConfig, TfidfModel
 
 OUT_SCHEMA = "from_id long, to_id long, sim_milli long, rnk int"
@@ -40,15 +47,14 @@ OUT_SCHEMA = "from_id long, to_id long, sim_milli long, rnk int"
 
 @dataclass
 class TfidfIndex:
-    """Driver-side fitted state, broadcast to the streaming kernel.
+    """Driver-side fitted state, broadcast to the serving kernels.
 
-    ``vpack`` (sorted uint64 gram keys, tid of each) is the whole-batch
-    vectorizer's vocabulary lookup, precomputed by ``build_index`` whenever
-    the batched-kernel precondition holds (cleaned text, n-grams ≤ 8
-    bytes — the same dispatch as ``operators/mapside.py``); None routes the
-    kernels to the per-doc fallback."""
+    ``vocab`` ({term: (tid, idf)}) and ``vpack`` are the map-side
+    vectorizer's vocabulary table (``mapside.vocab_table``); ``vpack``
+    None routes ``vectorize_keys`` to its per-doc fallback. ``to_mat``
+    rows sit on the same sorted-term tids."""
 
-    term_to_tid: dict
+    vocab: dict
     idf: np.ndarray          # (dim,)
     to_ids: np.ndarray       # (n_to,)
     to_mat: np.ndarray       # (n_to, dim) L2-normalized tf-idf rows
@@ -56,79 +62,12 @@ class TfidfIndex:
     vpack: tuple | None = None
 
 
-def _vectorize_py(key: str, term_to_tid: dict, idf: np.ndarray,
-                  cfg: TfidfConfig) -> np.ndarray | None:
-    s = _clean_py(key) if cfg.clean_string else key
-    tids = [term_to_tid.get(g) for g in _grams_py(s, cfg)]
-    tids = [t for t in tids if t is not None]  # OOV dropped pre-norm
-    if not tids:
-        return None
-    v = np.zeros(len(idf))
-    np.add.at(v, tids, 1.0)
-    v *= idf
-    nrm = float(np.sqrt((v * v).sum()))
-    return v / nrm if nrm > 0 else None
-
-
 def _vectorize_rows(keys: list, ix: TfidfIndex) -> tuple[np.ndarray, np.ndarray]:
     """(kept row positions, (k, dim) L2-normalized query matrix) for one
-    Arrow batch — the serving-side twin of ``mapside.
-    vectorize_packed_mapside``'s dispatch (VERDICT r02 item 2: the per-doc
-    Python loop was a needless constant factor on the ingest hot path;
-    the whole-batch kernel measured 2.3× faster on the batch side).
-
-    Batched route (``ix.vpack`` present): one ``_iter_gram_windows`` pass
-    over the packed batch buffer, vocabulary lookup via searchsorted,
-    counts accumulated straight into the dense matrix — value-identical to
-    the per-doc path (same integer counts × idf, same full-row L2 norm).
-    Rows with no in-vocabulary grams are dropped (OOV before norm)."""
-    dim = len(ix.idf)
-    if ix.vpack is not None:
-        from ..operators.mapside import _iter_gram_windows
-
-        vk, vtid = ix.vpack
-        parts = list(_iter_gram_windows(keys, ix.config))
-        if parts:
-            doc_of = np.concatenate([p[0] for p in parts])
-            g = np.concatenate([p[1] for p in parts])
-            pos = np.searchsorted(vk, g)
-            in_r = pos < vk.size
-            ok = in_r.copy()
-            ok[in_r] = vk[pos[in_r]] == g[in_r]
-            d, p = doc_of[ok], pos[ok]
-            # per-(doc, tid) tf counts via one sort + run lengths, then ONE
-            # scatter into the kept-rows matrix — never a full-matrix
-            # multiply/sum pass (dense passes made the first cut of this
-            # kernel 2.3x SLOWER than the per-doc loop; this shape is the
-            # measured-fast one, same as mapside.vectorize_packed_mapside)
-            flat = d.astype(np.int64) * dim + vtid[p]
-            flat.sort(kind="stable")
-            run = np.ones(flat.size, dtype=bool)
-            run[1:] = flat[1:] != flat[:-1]
-            starts = np.nonzero(run)[0]
-            if starts.size:
-                cnt = np.diff(np.append(starts, flat.size)).astype(np.float64)
-                ku = flat[run]
-                tid_u = ku % dim
-                d_u = ku // dim
-                w = cnt * ix.idf[tid_u]
-                nrm2 = np.bincount(d_u, weights=w * w, minlength=len(keys))
-                kept = np.nonzero(nrm2 > 0)[0]
-                rank = np.full(len(keys), -1, dtype=np.int64)
-                rank[kept] = np.arange(len(kept))
-                V = np.zeros((len(kept), dim))
-                V[rank[d_u], tid_u] = w / np.sqrt(nrm2[d_u])
-                return kept, V
-        return np.empty(0, dtype=np.int64), np.empty((0, dim))
-    vecs, kept = [], []
-    for i, key in enumerate(keys):
-        v = _vectorize_py(key or "", ix.term_to_tid, ix.idf, ix.config)
-        if v is not None:
-            vecs.append(v)
-            kept.append(i)
-    if not vecs:
-        return np.empty(0, dtype=np.int64), np.empty((0, dim))
-    return np.asarray(kept, dtype=np.int64), np.vstack(vecs)
+    Arrow batch: the map-side kernel's packed vectors scattered into dense
+    rows. Keys with no in-vocabulary gram are not kept."""
+    kept, ts, ws = vectorize_keys(keys, ix.vocab, ix.vpack, ix.config)
+    return np.asarray(kept, dtype=np.int64), scatter_rows(ts, ws, len(ix.idf))
 
 
 def build_index(model: TfidfModel, to_vec: DataFrame,
@@ -139,8 +78,6 @@ def build_index(model: TfidfModel, to_vec: DataFrame,
     enforced via the shared ``fits_broadcast`` budget (gate BEFORE the
     collects; an over-budget serving corpus must take the blocked matcher
     path, not OOM the driver)."""
-    from ..operators.dense_cosine import fits_broadcast
-
     dim = model.idf.count()
     n_to = to_vec.select(id_col).distinct().count()
     if not fits_broadcast(n_to, dim):
@@ -150,32 +87,18 @@ def build_index(model: TfidfModel, to_vec: DataFrame,
             "corpus with the blocked path (operators.adaptive."
             "tfidf_transform_topk) instead"
         )
-    idf_rows = sorted(model.idf.collect(), key=lambda r: r["term"])
-    term_to_tid = {r["term"]: i for i, r in enumerate(idf_rows)}
-    idf = np.array([r["idf"] for r in idf_rows])
-    by_doc: dict = {}
-    for r in to_vec.select(id_col, "term", "weight").collect():
-        by_doc.setdefault(r[id_col], []).append((term_to_tid[r["term"]],
-                                                 r["weight"]))
-    to_ids = np.array(sorted(by_doc), dtype=np.int64)
+    vocab, vpack = vocab_table(model)
+    idf = np.array([idf for _, idf in vocab.values()])
+    rows = to_vec.select(id_col, "term", "weight").collect()
+    to_ids, row_of = np.unique(
+        np.array([r[id_col] for r in rows], dtype=np.int64),
+        return_inverse=True,
+    )
     to_mat = np.zeros((len(to_ids), len(idf)))
-    for i, d in enumerate(to_ids):
-        for tid, w in by_doc[d]:
-            to_mat[i, tid] = w
-    cfg = model.config
-    vpack = None
-    terms = [r["term"] for r in idf_rows]
-    if (
-        cfg.clean_string
-        and cfg.n_gram_range[1] <= 8
-        and all(len(t.encode("utf-8")) <= 8 for t in terms)
-    ):
-        from ..operators.mapside import _pack_grams_u64
-
-        vkeys = _pack_grams_u64(terms)  # index i IS tid (sorted-term order)
-        order = np.argsort(vkeys)
-        vpack = (vkeys[order], order.astype(np.int64))
-    return TfidfIndex(term_to_tid, idf, to_ids, to_mat, cfg, vpack)
+    to_mat[
+        row_of, np.array([vocab[r["term"]][0] for r in rows], dtype=np.int64)
+    ] = [r["weight"] for r in rows]
+    return TfidfIndex(vocab, idf, to_ids, to_mat, model.config, vpack)
 
 
 def incremental_match(
@@ -191,34 +114,19 @@ def incremental_match(
     is a stateless mapInPandas either way."""
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(index)
-    min_milli = int(np.floor(round(min_similarity, 3) * 1000 + 0.5))
+    min_milli = int(to_milli(min_similarity))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ix: TfidfIndex = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            rows_f, rows_t, rows_s, rows_r = [], [], [], []
             pos, mat = _vectorize_rows(list(pdf[key_col]), ix)
-            # empty-index guard (ADVICE r02): a zero-row serving corpus
-            # yields no matches, not a degenerate matmul
-            if len(pos) and len(ix.to_mat):
-                ids = pdf[id_col].to_numpy()[pos]
-                sims = mat @ ix.to_mat.T
-                milli = np.floor(np.round(sims, 3) * 1000 + 0.5).astype(
-                    np.int64
-                )
-                for i, did in enumerate(ids):
-                    row = milli[i]
-                    ok = np.nonzero(row >= min_milli)[0]
-                    order = ok[np.lexsort((ix.to_ids[ok], -row[ok]))][:top_n]
-                    rows_f.extend([did] * len(order))
-                    rows_t.extend(ix.to_ids[order])
-                    rows_s.extend(row[order])
-                    rows_r.extend(range(1, len(order) + 1))
+            # a zero-row index gives a (k, 0) matrix, hence no rows
+            milli = to_milli(mat @ ix.to_mat.T)
+            q, c, rnk = topk_milli(milli, ix.to_ids, top_n, min_milli)
             yield pd.DataFrame(
-                {"from_id": rows_f, "to_id": rows_t, "sim_milli": rows_s,
-                 "rnk": rows_r}
+                {"from_id": pdf[id_col].to_numpy()[pos][q],
+                 "to_id": ix.to_ids[c], "sim_milli": milli[q, c],
+                 "rnk": rnk}
             )
 
     return docs.select(
@@ -276,24 +184,18 @@ def admission_filter(
     (no in-vocabulary n-grams) score 0 and are admitted."""
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(index)
-    thr_milli = int(np.floor(round(threshold, 3) * 1000 + 0.5))
+    thr_milli = int(to_milli(threshold))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ix: TfidfIndex = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            best = np.zeros(len(pdf), dtype=np.int64)
             keys = list(pdf[key_col])
             pos, mat = _vectorize_rows(keys, ix)
-            # empty-index guard (ADVICE r02): with zero corpus rows,
-            # max(axis=1) over a (k, 0) matmul raises — score 0, admit all
-            if len(pos) and len(ix.to_mat):
-                sims = mat @ ix.to_mat.T
-                milli = np.floor(np.round(sims, 3) * 1000 + 0.5).astype(
-                    np.int64
-                )
-                best[pos] = milli.max(axis=1)
+            best = np.zeros(len(keys), dtype=np.int64)
+            # initial=0: a zero-row index scores every doc 0 instead of
+            # raising on a max over an empty axis; cosines of tf-idf
+            # vectors are never negative, so it changes no score
+            best[pos] = to_milli(mat @ ix.to_mat.T).max(axis=1, initial=0)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf[id_col].to_numpy(),

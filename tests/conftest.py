@@ -3,10 +3,6 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-# the session's 48g default heap is sized for a large driver; on a small
-# box G1 grows the suite's one long-lived JVM past physical memory (the
-# live set stays small) until the kernel kills it mid-run
-os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -28,3 +28,21 @@ def test_benchmark_setup_names_exist():
         callable(f)
         for f in (fit_tfidf, vectorize, build_index, admission_filter)
     )
+
+
+def test_serving_index_pickles_with_the_fields_the_benchmark_reads(spark):
+    """``perfbench``'s admission set-up builds the index from
+    ``fit_tfidf``/``vectorize``, pickles it for ``incremental.index_bytes``
+    and reads ``len(index.to_ids)`` and ``len(index.idf)``."""
+    import pickle
+
+    from polyfuzz_spark.api import lists_to_df
+    from polyfuzz_spark.operators.tfidf import fit_tfidf, vectorize
+    from polyfuzz_spark.streaming.incremental import build_index
+
+    docs = lists_to_df(spark, ["apple pie", "apples", "mouse house"])
+    model = fit_tfidf(docs, "key")
+    index = build_index(model, vectorize(model, docs, "key"))
+    back = pickle.loads(pickle.dumps(index))
+    assert len(back.to_ids) == 3
+    assert len(back.idf) == model.idf.count() > 0

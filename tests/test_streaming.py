@@ -647,3 +647,37 @@ def test_streaming_lm_gate_matches_batch(spark, tmp_path):
     )
     assert got == want == [1, 2]
     assert "bits_milli" in out.columns
+
+
+def test_serving_rounds_an_exact_half_milli_up(spark):
+    """An exact half-milli cosine (0.3125) quantizes half-up to 313 through
+    both public serving calls, as Spark's floor(round(x, 3) * 1000 + 0.5)
+    and the dense kernels do; half-to-even rounding would give 312 and
+    admit the doc at threshold 0.313."""
+    import dataclasses
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from polyfuzz_spark.streaming.incremental import admission_filter
+
+    # one fitted doc: its 4 trigrams all have idf 1.0, so the query
+    # "abcdef" vectorizes to 0.5 on each; a corpus row of 0.625 on tid 0
+    # ("abc") gives a cosine of exactly 0.5 * 0.625 = 0.3125
+    fit_df = lists_to_df(spark, ["abcdef"])
+    model = fit_tfidf(fit_df, "key")
+    index = build_index(model, vectorize(model, fit_df, "key"))
+    to_mat = np.zeros((1, len(index.idf)))
+    to_mat[0, 0] = 0.625
+    index = dataclasses.replace(index, to_mat=to_mat)
+    spark_milli = spark.range(1).select(
+        F.floor(F.round(F.lit(0.3125), 3) * 1000 + 0.5).alias("m")
+    ).first()["m"]
+    assert spark_milli == 313
+
+    docs = lists_to_df(spark, ["abcdef"])
+    got = incremental_match(docs, index).toPandas()
+    assert got.sim_milli.tolist() == [spark_milli]
+    verdict = admission_filter(docs, index, threshold=0.313).toPandas()
+    assert verdict.best_sim_milli.tolist() == [spark_milli]
+    assert not verdict.admitted.any()
