@@ -47,24 +47,3 @@ def char_ngrams(
     if remove_space_ngrams:
         out = F.filter(out, lambda g: ~g.contains(" "))
     return out
-
-
-def char_ngrams_sql(expr: str, n_from: int = 3, n_to: int = 3,
-                    remove_space_ngrams: bool = True) -> str:
-    """DuckDB SQL producing the same n-gram list (for oracle parity).
-
-    DuckDB lacks Spark's `transform` lambda syntax pre-1.1; use
-    list_transform + generate_series.
-    """
-    parts = []
-    for n in range(n_from, n_to + 1):
-        seq = (
-            f"CASE WHEN length({expr}) >= {n} THEN "
-            f"list_transform(generate_series(1, length({expr}) - {n - 1}), "
-            f"i -> substring({expr}, i, {n})) ELSE [] END"
-        )
-        parts.append(seq)
-    out = parts[0] if len(parts) == 1 else "list_concat(" + ", ".join(parts) + ")"
-    if remove_space_ngrams:
-        out = f"list_filter({out}, g -> NOT contains(g, ' '))"
-    return out

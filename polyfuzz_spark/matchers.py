@@ -162,10 +162,10 @@ class EmbeddingMatcher(BaseSparkMatcher):
     cartesian product). Over the broadcast budget the kernel itself
     degrades to the LSH-bucketed path (``lsh_conf`` tunes it).
 
-    Similarity precision note: the kernel emits half-up milli-quantized
-    cosines, so the ``min_similarity`` threshold compares against the
-    3-decimal-rounded score (divergence from the reference only within
-    0.0005 of the threshold).
+    Similarity precision note: cosines are quantized by the score rule of
+    ``functions.milli`` and reported as milli / 1000, which
+    ``min_similarity`` then filters (``top_n_matches``), so a cosine up to
+    0.0005 below the threshold can pass.
     """
 
     type = "Embeddings"

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions.milli import ratio_milli
+
 
 def precision_recall_curve(
     matches: DataFrame, precision_step: float = 0.01
@@ -139,7 +141,7 @@ def blocking_quality(
     either orientation. ``n_records`` is the record count (int) or a
     one-row DataFrame with column ``n``.
 
-    Ratios are emitted in integer milli (floor(round(x,3)·1000 + 0.5)) for
+    Ratios are emitted by the count-ratio rule of ``functions.milli`` for
     engine-exact comparison; a zero denominator yields NULL (no truth
     pairs → PC undefined, not 0). One row out.
 
@@ -171,10 +173,6 @@ def blocking_quality(
             F.lit(int(n_records)).cast("bigint").alias("n_records")
         )
 
-    milli = lambda x: F.floor(F.round(x, 3) * 1000 + F.lit(0.5)).cast("bigint")
-    ratio = lambda num, den: F.when(
-        den > 0, milli(num.cast("double") / den.cast("double"))
-    )
     # double, not bigint: n·(n−1)/2 overflows int64 past ~4.3e9 records,
     # and the ratio is consumed at milli precision anyway
     total = (
@@ -189,15 +187,12 @@ def blocking_quality(
             "n_candidate_pairs",
             "n_true_pairs",
             "n_true_in_candidates",
-            ratio(
-                total - F.col("n_candidate_pairs"), total
-            ).alias("reduction_ratio_milli"),
-            ratio(
-                F.col("n_true_in_candidates"), F.col("n_true_pairs")
-            ).alias("pairs_completeness_milli"),
-            ratio(
-                F.col("n_true_in_candidates"), F.col("n_candidate_pairs")
-            ).alias("pairs_quality_milli"),
+            ratio_milli(total - F.col("n_candidate_pairs"), total)
+            .alias("reduction_ratio_milli"),
+            ratio_milli("n_true_in_candidates", "n_true_pairs")
+            .alias("pairs_completeness_milli"),
+            ratio_milli("n_true_in_candidates", "n_candidate_pairs")
+            .alias("pairs_quality_milli"),
         )
     )
 
@@ -287,7 +282,7 @@ def fs_field_stats(
     hand-set. One row per field:
     (field, n_match, n_nonmatch, m_milli, u_milli).
 
-    Probabilities in integer milli (floor(round(x,3)·1000+0.5)); zero
+    Probabilities by the count-ratio rule of ``functions.milli``; zero
     denominators yield NULL. One map-side-combined aggregation over the
     pair table builds every counter; the per-field long form comes from a
     constant-width stack of the one aggregate row — nothing scales with
@@ -319,19 +314,12 @@ def fs_field_stats(
             )
         ),
     )
-    milli = lambda num, den: F.when(
-        den > 0,
-        F.floor(
-            F.round(num.cast("double") / den.cast("double"), 3) * 1000
-            + F.lit(0.5)
-        ).cast("bigint"),
-    )
     return stacked.select(
         "field",
         F.col("_nm").alias("n_match"),
         F.col("_nu").alias("n_nonmatch"),
-        milli(F.col("_ma"), F.col("_nm")).alias("m_milli"),
-        milli(F.col("_ua"), F.col("_nu")).alias("u_milli"),
+        ratio_milli("_ma", "_nm").alias("m_milli"),
+        ratio_milli("_ua", "_nu").alias("u_milli"),
     )
 
 
@@ -407,8 +395,8 @@ def cluster_churn(
     both tables (a key absent from one side is a singleton of itself
     there), how many records changed cluster, and how the cluster count
     moved. One row: (n_records, n_moved, churn_milli, n_clusters_old,
-    n_clusters_new). churn_milli uses the house milli quantization; one
-    full-outer equi-join + one map-side-combined agg.
+    n_clusters_new); churn_milli = n_moved / n_records by the count-ratio
+    rule of ``functions.milli``; one full-outer equi-join + one agg.
     """
     o = old_assignments.select(
         F.col(id_col).alias("_k"), F.col(rep_col).alias("_or")
@@ -420,7 +408,6 @@ def cluster_churn(
         F.coalesce("_or", F.col("_k")).alias("_eo"),
         F.coalesce("_nr", F.col("_k")).alias("_en"),
     )
-    milli = lambda x: F.floor(F.round(x, 3) * 1000 + F.lit(0.5)).cast("bigint")
     agg = u.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_records"),
         F.count(F.when(F.col("_eo") != F.col("_en"), 1))
@@ -431,13 +418,7 @@ def cluster_churn(
     return agg.select(
         "n_records",
         "n_moved",
-        F.when(
-            F.col("n_records") > 0,
-            milli(
-                F.col("n_moved").cast("double")
-                / F.col("n_records").cast("double")
-            ),
-        ).alias("churn_milli"),
+        ratio_milli("n_moved", "n_records").alias("churn_milli"),
         "n_clusters_old",
         "n_clusters_new",
     )

@@ -23,6 +23,7 @@ from dataclasses import replace as _dc_replace
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.milli import milli, threshold_milli
 from .tfidf import TfidfConfig
 
 _UNSET = object()
@@ -182,14 +183,12 @@ def _as_doc_id(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
 def _rank_milli(scored: DataFrame, top_n: int,
                 min_similarity: float) -> DataFrame:
     """(from_id, to_id, sim_milli, rnk) from exact (from_id, to_id, sim)
-    scores: two-step milli quantization — same value as the dense
-    kernel's half-up floor(x*1000+0.5) for x >= 0 — then the top-n per
-    from_id on (sim_milli desc, to_id asc), the dense kernel's contract."""
-    milli = F.floor(F.round("sim", 3) * 1000 + F.lit(0.5)).cast("bigint")
-    min_milli = int(round(min_similarity * 1000)) if min_similarity > 0 else 0
+    scores: the score and threshold rules of ``functions.milli`` (the ones
+    the dense kernel applies), then the top-n per from_id on
+    (sim_milli desc, to_id asc), the dense kernel's contract."""
     ranked = (
-        scored.select("from_id", "to_id", milli.alias("sim_milli"))
-        .where(F.col("sim_milli") >= min_milli)
+        scored.select("from_id", "to_id", milli("sim").alias("sim_milli"))
+        .where(F.col("sim_milli") >= threshold_milli(min_similarity))
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("sim_milli"), F.asc("to_id")

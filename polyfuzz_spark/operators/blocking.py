@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.milli import milli
 from ..functions.ngrams import char_ngrams
 from ..functions.normalize import clean_string
 from .tfidf import TfidfConfig
@@ -215,7 +216,6 @@ def lsh_parameter_plan(
             F.col("bands").cast("double"),
         )
     )
-    milli = lambda x: F.floor(F.round(x, 3) * 1000 + F.lit(0.5)).cast("bigint")
     return rows.select(
         "bands",
         "rows",

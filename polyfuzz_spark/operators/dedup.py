@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.milli import ratio_milli, ratio_to_milli, threshold_milli
 from ..functions.ngrams import char_ngrams
 from .blocking import minhash_candidates
 from .tfidf import TfidfConfig
@@ -171,7 +172,7 @@ def _jaccard_dense_pdf(
         pdf[["doc_id", "ts"]], schema="doc_id long, ts array<int>"
     )
 
-    min_milli = int(round(threshold * 1000))
+    min_milli = threshold_milli(threshold)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         to_ids, to_u8, to_sz = bc.value
@@ -201,7 +202,7 @@ def _jaccard_dense_pdf(
                     out_f.extend([q_ids[i]] * len(keep))
                     out_t.extend(to_ids[keep])
                     out_j.extend(
-                        np.floor(jac[i][keep] * 1000 + 0.5).astype(np.int64)
+                        ratio_to_milli(inter[i][keep], union[i][keep])
                     )
                 yield pd.DataFrame(
                     {"from_id": out_f, "to_id": out_t, "jaccard_milli": out_j}
@@ -373,7 +374,7 @@ def _jaccard_distinct_sets(g: DataFrame, threshold: float,
             "jaccard_milli",
         )
     )
-    min_milli = int(round(threshold * 1000))
+    min_milli = threshold_milli(threshold)
     a = sets.select(F.col("rep").alias("r"), F.explode("members").alias("x"))
     b = sets.select(F.col("rep").alias("r2"), F.explode("members").alias("y"))
     intra = (
@@ -451,7 +452,7 @@ def _containment_distinct_sets(
             .alias("containment_milli"),
         )
     )
-    min_milli = int(round(threshold * 1000))
+    min_milli = threshold_milli(threshold)
     if min_milli > 1000:  # degenerate threshold > 1: nothing qualifies
         return cross.where(F.lit(False))
     a = sets.select(F.col("rep").alias("r"), F.explode("members").alias("x"))
@@ -511,7 +512,8 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("from_id"), F.col("n_grams").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("to_id"), F.col("n_grams").alias("nb"))
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    union = F.col("na") + F.col("nb") - F.col("inter")
+    jac = F.col("inter") / union
     return (
         inter.join(sa, "from_id")
         .join(sb, "to_id")
@@ -519,7 +521,7 @@ def ngram_jaccard_pairs(
         .select(
             "from_id",
             "to_id",
-            F.floor(jac * 1000 + F.lit(0.5)).cast("bigint").alias("jaccard_milli"),
+            ratio_milli("inter", union).alias("jaccard_milli"),
         )
     )
 
@@ -593,7 +595,7 @@ def ngram_containment_pairs(
             "containment_milli",
             F.expr("(1000 * _inter) div least(_na, _nb)"),
         )
-        .where(F.col("containment_milli") >= int(round(threshold * 1000)))
+        .where(F.col("containment_milli") >= threshold_milli(threshold))
     )
     smaller_is_a = (F.col("_na") < F.col("_nb")) | (
         (F.col("_na") == F.col("_nb")) & (F.col("_a") < F.col("_b"))
@@ -675,7 +677,8 @@ def minhash_near_dups(
     sb = sizes.select(
         F.col("doc_id").alias("to_id"), F.col("n_grams").alias("nb")
     ).hint("merge")
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
+    union = F.col("na") + F.col("nb") - F.col("inter")
+    jac = F.col("inter") / union
     return (
         inter.join(sa, "from_id")
         .join(sb, "to_id")
@@ -683,7 +686,7 @@ def minhash_near_dups(
         .select(
             "from_id",
             "to_id",
-            F.floor(jac * 1000 + F.lit(0.5)).cast("bigint").alias("jaccard_milli"),
+            ratio_milli("inter", union).alias("jaccard_milli"),
         )
     )
 

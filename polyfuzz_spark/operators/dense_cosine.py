@@ -12,8 +12,8 @@ whenever the vocabulary is small or postings are long (hot-term fan-out
 makes the term join quadratic; a 5k-doc corpus with 75 distinct trigrams
 produces a 1.1-billion-row join but a 5000×75 matmul).
 
-Scores are quantized INSIDE the kernel to integer milli-units by the one
-half-up quantizer ``to_milli`` and ranked by the one per-row ranker
+Scores are quantized INSIDE the kernel to integer milli-units by the
+score rule ``functions.milli.to_milli`` and ranked by the one per-row ranker
 ``topk_milli`` (milli desc, to_id asc) — bit-identical to the engine's
 relational top-k and to the DuckDB oracles. The streaming serving index
 (``streaming/incremental.py``) calls both instead of keeping its own.
@@ -38,6 +38,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.milli import threshold_milli, to_milli
 
 OUT_SCHEMA = "from_id long, to_id long, sim_milli long, rnk int"
 
@@ -204,19 +206,6 @@ def _spread(df: DataFrame, n_rows: int) -> DataFrame:
     return df.repartition(n_part)
 
 
-def to_milli(x):
-    """Half-up integer milli-units, ``floor(x * 1000 + 0.5)`` — the one
-    score quantizer of the dense and serving kernels, applied to scores
-    and thresholds alike. For x ≥ 0 it equals the relational two-step
-    ``floor(round(x, 3) * 1000 + 0.5)`` (Spark rounds half-up; the 0.5
-    slack absorbs the ~1e-13 wobble of the /1000 step). numpy's and
-    Python's round are half-to-even and must never enter: an exact cosine
-    of 0.3125 is 313, not 312."""
-    return np.floor(np.asarray(x, dtype=np.float64) * 1000 + 0.5).astype(
-        np.int64
-    )
-
-
 def topk_milli(
     milli: np.ndarray, to_cmp: np.ndarray, k: int, min_milli: int,
     q_cmp: np.ndarray | None = None,
@@ -310,7 +299,7 @@ def tfidf_dense_topk_packed_two(
     to_mat = scatter_rows([r["t"] for r in rows], [r["w"] for r in rows], dim)
     sc = spark.sparkContext
     bc_ids, bc_mat = sc.broadcast(codec), sc.broadcast(to_mat)
-    min_milli = int(to_milli(min_similarity))
+    min_milli = threshold_milli(min_similarity)
     from ..functions.ids import id_type
 
     return _spread(from_packed.select("doc_id", "t", "w"), n_to).mapInPandas(
@@ -372,7 +361,7 @@ def embedding_near_dup_pairs(
     documented ANN tradeoff; precision stays 1 because scores are exact).
     """
     n_corpus, dim, bcs = _embedding_corpus(corpus, id_col, vec_col)
-    min_milli = int(to_milli(threshold))
+    min_milli = threshold_milli(threshold)
     if bcs is None:
         # LSH candidates with exact re-score ≥ threshold: reuse the bucketed
         # top-k machinery with k → corpus (every candidate above threshold

@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.milli import milli, to_milli
+
 
 def _norm_vec(df: DataFrame, id_out: str, vec_out: str,
               id_col: str, vec_col: str) -> DataFrame:
@@ -75,9 +77,7 @@ def cosine_topk(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        F.floor(_dot("q_vec", "c_vec") * 1000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cos_milli"),
+        milli(_dot("q_vec", "c_vec")).alias("cos_milli"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_milli"), F.asc("neighbor_id")
@@ -143,9 +143,7 @@ def _grouped_topk(
         kk = min(k, len(c_ids))
         for lo in range(0, len(q_ids_all), _Q_CHUNK):
             q_ids = q_ids_all[lo:lo + _Q_CHUNK]
-            milli = np.floor(
-                (Q_all[lo:lo + _Q_CHUNK] @ C.T) * 1000 + 0.5
-            ).astype(np.int64)
+            milli = to_milli(Q_all[lo:lo + _Q_CHUNK] @ C.T)
             if exclude_self:
                 milli[q_ids[:, None] == c_ids[None, :]] = _SELF_MASK
             idx = np.argsort(-milli, axis=1, kind="stable")[:, :kk]

@@ -141,11 +141,3 @@ def resize_features(features: DataFrame, out_dim: int = 8) -> DataFrame:
     return ensure_min_partitions(features.select("doc_id", "feature")).mapInPandas(
         run, schema="doc_id long, feature array<float>"
     )
-
-
-def decode_image(payload: bytes):  # pragma: no cover - explicit stub
-    """Real image decode is NOT implemented in this environment."""
-    raise NotImplementedError(
-        "image decode requires PIL/libvips; not available in this sandbox — "
-        "swap _decode_stub/extract_features' decoder in production"
-    )

@@ -1,11 +1,12 @@
 """Driver-contract queries: one entry per implemented operator, each with an
 exact ANSI-SQL (DuckDB) oracle twin where the semantics are deterministic.
 
-Float-parity policy: every similarity/ratio crossing the oracle boundary is
-quantized to integer milli-units with the SAME formula on both sides
-(``floor(round(x, 3) * 1000 + 0.5)``), and every top-k uses the quantized
-score plus an id tie-break, so cross-engine ulp differences cannot flip
-hashes or orderings (documented risk only within ~1e-12 of a boundary).
+Float-parity policy: every similarity/ratio/threshold crossing the oracle
+boundary is quantized to integer milli-units by the rules of
+``functions/milli.py`` (one IEEE operation sequence in both engines), and
+every top-k uses the quantized score plus an id tie-break, so only a score
+the engines sum in a different order AND within ~1e-12 of a half-milli can
+flip a hash or ordering (documented risk).
 
 Approximate operators (LSH ANN, IVF ANN) return rows-only checks by design;
 their exact counterparts (brute-force cosine, exact Jaccard) ARE oracle
@@ -19,10 +20,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions import textstats as TS
+from .functions.milli import (
+    milli,
+    milli_sql,
+    ratio_milli,
+    ratio_milli_sql,
+    threshold_milli,
+)
 from .functions.normalize import clean_string, clean_string_sql
-
-MILLI = "CAST(floor(round({x}, 3) * 1000 + 0.5) AS BIGINT)"
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -42,10 +47,6 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _embs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-def _milli(col) -> F.Column:
-    return F.floor(F.round(col, 3) * 1000 + F.lit(0.5)).cast("bigint")
 
 
 # --------------------------------------------------------------------------
@@ -133,7 +134,7 @@ nrm AS (SELECT id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY 1),
 vec AS (SELECT w.id, w.term, w.w / nrm.nrm AS weight FROM w JOIN nrm USING (id)),
 pairs AS (
   SELECT a.id AS from_id, b.id AS to_id,
-         {MILLI.format(x='sum(a.weight * b.weight)')} AS sim_milli
+         {milli_sql('sum(a.weight * b.weight)')} AS sim_milli
   FROM vec a JOIN vec b ON a.term = b.term AND a.id <> b.id
   GROUP BY 1, 2
 ),
@@ -141,7 +142,7 @@ best AS (
   SELECT from_id, to_id, sim_milli,
          row_number() OVER (PARTITION BY from_id
                             ORDER BY sim_milli DESC, to_id) AS rnk
-  FROM pairs WHERE sim_milli >= {int(min_sim * 1000)}
+  FROM pairs WHERE sim_milli >= {threshold_milli(min_sim)}
 )"""
 
 
@@ -169,7 +170,7 @@ def q_cluster_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     pad = lambda c: F.lpad(F.col(c).cast("string"), 12, "0")
     edges = ranked.where(
         (F.col("rnk") <= CLUSTER_TOP_N)
-        & (F.col("sim_milli") > int(LINK_MIN_SIM * 1000))
+        & (F.col("sim_milli") > threshold_milli(LINK_MIN_SIM))
     ).select(pad("from_id").alias("src"), pad("to_id").alias("dst"))
     cc = connected_components(edges)
     return cc.select(
@@ -182,7 +183,7 @@ ORACLE_CLUSTERS = f"""
 WITH RECURSIVE {_tfidf_oracle_cte(TFIDF_MIN_SIM, CLUSTER_TOP_N)},
 edges AS (
   SELECT from_id AS a, to_id AS b FROM best
-  WHERE rnk <= {CLUSTER_TOP_N} AND sim_milli > {int(LINK_MIN_SIM * 1000)}
+  WHERE rnk <= {CLUSTER_TOP_N} AND sim_milli > {threshold_milli(LINK_MIN_SIM)}
 ),
 sym AS (SELECT a, b FROM edges UNION SELECT b AS a, a AS b FROM edges),
 reach(v, r) AS (
@@ -287,7 +288,7 @@ newvec AS (SELECT neww.id, neww.term, neww.w / newnrm.nrm AS weight
            FROM neww JOIN newnrm USING (id)),
 pairs AS (
   SELECT a.id AS from_id, b.id AS to_id,
-         {MILLI.format(x='sum(a.weight * b.weight)')} AS sim_milli
+         {milli_sql('sum(a.weight * b.weight)')} AS sim_milli
   FROM newvec a JOIN tovec b ON a.term = b.term
   GROUP BY 1, 2
 ),
@@ -295,7 +296,7 @@ best AS (
   SELECT from_id, to_id, sim_milli,
          row_number() OVER (PARTITION BY from_id
                             ORDER BY sim_milli DESC, to_id) AS rnk
-  FROM pairs WHERE sim_milli >= {int(TRANSFORM_MIN_SIM * 1000)}
+  FROM pairs WHERE sim_milli >= {threshold_milli(TRANSFORM_MIN_SIM)}
 )
 SELECT n.id AS from_id, b.to_id AS to_id,
        COALESCE(b.sim_milli, 0) AS sim_milli
@@ -323,7 +324,7 @@ def q_score_pairs_jw(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(b, "pair_id")
     scored = score_pairs(pairs, "jaro_winkler")
     return scored.select(
-        "pair_id", _milli(F.col("similarity")).alias("sim_milli")
+        "pair_id", milli(F.col("similarity")).alias("sim_milli")
     )
 
 
@@ -334,7 +335,7 @@ b AS (SELECT doc_id - 1 AS pair_id, substring(text, 1, 40) AS kb
       FROM documents),
 p AS (SELECT pair_id, ka, kb FROM a JOIN b USING (pair_id))
 SELECT pair_id,
-       {MILLI.format(x='jaro_winkler_similarity(ka, kb)')} AS sim_milli
+       {milli_sql('jaro_winkler_similarity(ka, kb)')} AS sim_milli
 FROM p
 """
 
@@ -383,7 +384,7 @@ def q_identifier_match_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = f.repartition(n_part).crossJoin(t).select(
         "from_id", "from_ident", "to_id", "to_ident",
-        _milli(sim).alias("sim_milli"),
+        milli(sim).alias("sim_milli"),
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("sim_milli"), F.asc("to_id")
@@ -407,7 +408,6 @@ def _oracle_identifier_match_top1() -> str:
         "ELSE 1.0 - levenshtein(fn, tn) * 1.0 "
         "/ greatest(length(fn), length(tn)) END"
     )
-    milli = MILLI.format(x=sim)
     return f"""
 WITH f AS (SELECT p_partkey AS from_id, {pascal} AS from_ident
            FROM part WHERE p_partkey % 40 = 0),
@@ -419,7 +419,7 @@ tn AS (SELECT to_id, to_ident,
               {identifier_norm_sql('to_ident')} AS tn FROM t),
 pairs AS (
   SELECT from_id, from_ident, to_id, to_ident,
-         {milli} AS sim_milli
+         {milli_sql(sim)} AS sim_milli
   FROM fn, tn),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY from_id
@@ -484,7 +484,7 @@ def q_jaro_winkler_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the materialized pair table
     n_part = spark.sparkContext.defaultParallelism * 2
     pairs = f.repartition(n_part).crossJoin(t).select(
-        "from_id", "to_id", _milli(jw).alias("jw_milli")
+        "from_id", "to_id", milli(jw).alias("jw_milli")
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("jw_milli"), F.asc("to_id")
@@ -503,7 +503,7 @@ t AS (SELECT doc_id AS to_id, substring(text, 1, 40) AS tk
       FROM documents WHERE doc_id >= 450),
 pairs AS (
   SELECT from_id, to_id,
-         {MILLI.format(x='jaro_winkler_similarity(fk, tk)')} AS jw_milli
+         {milli_sql('jaro_winkler_similarity(fk, tk)')} AS jw_milli
   FROM f, t),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY from_id
@@ -538,7 +538,7 @@ def q_token_sort_lev_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.greatest(F.length("fs"), F.length("ts"))
     )
     pairs = f.repartition(n_part).crossJoin(t).select(
-        "from_id", "to_id", _milli(sim).alias("sim_milli")
+        "from_id", "to_id", milli(sim).alias("sim_milli")
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("sim_milli"), F.asc("to_id")
@@ -563,7 +563,7 @@ WITH f AS (SELECT doc_id AS from_id, {fs} AS fs
 t AS (SELECT doc_id AS to_id, {fs} AS ts
       FROM documents WHERE doc_id >= 450),
 pairs AS (
-  SELECT from_id, to_id, {MILLI.format(x=sim)} AS sim_milli FROM f, t),
+  SELECT from_id, to_id, {milli_sql(sim)} AS sim_milli FROM f, t),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY from_id
                                ORDER BY sim_milli DESC, to_id) AS rnk
@@ -642,7 +642,7 @@ inter AS (
   GROUP BY 1, 2
 )
 SELECT from_id, to_id,
-       CAST(floor(c * 1000.0 / (sa.n + sb.n - c) + 0.5) AS BIGINT) AS jaccard_milli
+       {ratio_milli_sql('c', 'sa.n + sb.n - c')} AS jaccard_milli
 FROM inter
 JOIN sz sa ON from_id = sa.doc_id
 JOIN sz sb ON to_id = sb.doc_id
@@ -681,7 +681,7 @@ sized AS (
   SELECT f, t, sa.n AS na, sb.n AS nb,
          (1000 * c) // least(sa.n, sb.n) AS cm
   FROM inter JOIN sz sa ON f = sa.doc_id JOIN sz sb ON t = sb.doc_id
-  WHERE (1000 * c) // least(sa.n, sb.n) >= {int(CONTAIN_T * 1000)}
+  WHERE (1000 * c) // least(sa.n, sb.n) >= {threshold_milli(CONTAIN_T)}
 )
 SELECT CASE WHEN na < nb OR (na = nb AND f < t) THEN f ELSE t END
          AS contained_id,
@@ -871,10 +871,6 @@ def q_fs_field_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_fs_field_weights() -> str:
-    milli = (
-        "CASE WHEN {d} > 0 THEN CAST(floor(round(CAST({n} AS DOUBLE) / "
-        "CAST({d} AS DOUBLE), 3) * 1000 + 0.5) AS BIGINT) END"
-    )
     rows = []
     for field, agree in [
         ("lang_eq", "la = lb"),
@@ -883,8 +879,8 @@ def _oracle_fs_field_weights() -> str:
     ]:
         rows.append(
             f"SELECT '{field}' AS field, nm AS n_match, nu AS n_nonmatch,\n"
-            f"       {milli.format(n=f'm_{field}', d='nm')} AS m_milli,\n"
-            f"       {milli.format(n=f'u_{field}', d='nu')} AS u_milli\n"
+            f"       {ratio_milli_sql(f'm_{field}', 'nm')} AS m_milli,\n"
+            f"       {ratio_milli_sql(f'u_{field}', 'nu')} AS u_milli\n"
             "FROM counts"
         )
     counters = ",\n         ".join(
@@ -2223,11 +2219,11 @@ def q_embedding_cosine_top3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("rank", "rnk")
 
 
-ORACLE_EMB_TOP3 = """
+ORACLE_EMB_TOP3 = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         CAST(floor(list_cosine_similarity(a.v, b.v) * 1000 + 0.5) AS BIGINT)
+         {milli_sql('list_cosine_similarity(a.v, b.v)')}
            AS cos_milli
   FROM e a JOIN e b ON a.vec_id <> b.vec_id
 ),
@@ -2259,12 +2255,12 @@ ORACLE_EMB_DUPS = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 pairs AS (
   SELECT a.vec_id AS from_id, b.vec_id AS to_id,
-         CAST(floor(list_cosine_similarity(a.v, b.v) * 1000 + 0.5) AS BIGINT)
+         {milli_sql('list_cosine_similarity(a.v, b.v)')}
            AS cos_milli
   FROM e a JOIN e b ON a.vec_id < b.vec_id
 )
 SELECT from_id, to_id, cos_milli FROM pairs
-WHERE cos_milli >= {int(EMB_DUP_T * 1000)}
+WHERE cos_milli >= {threshold_milli(EMB_DUP_T)}
 """
 
 
@@ -2398,8 +2394,8 @@ WITH RECURSIVE e AS (
 pairs AS (
   SELECT a.vec_id AS from_id, b.vec_id AS to_id
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE CAST(floor(list_cosine_similarity(a.v, b.v) * 1000 + 0.5) AS BIGINT)
-        >= {int(EMB_DEDUP_T * 1000)}
+  WHERE {milli_sql('list_cosine_similarity(a.v, b.v)')}
+        >= {threshold_milli(EMB_DEDUP_T)}
 ),
 sym AS (SELECT from_id AS a, to_id AS b FROM pairs
         UNION SELECT to_id AS a, from_id AS b FROM pairs),
@@ -2444,8 +2440,8 @@ WITH RECURSIVE e AS (
 pairs AS (
   SELECT a.vec_id AS from_id, b.vec_id AS to_id
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE CAST(floor(list_cosine_similarity(a.v, b.v) * 1000 + 0.5) AS BIGINT)
-        >= {int(EMB_DEDUP_T * 1000)}
+  WHERE {milli_sql('list_cosine_similarity(a.v, b.v)')}
+        >= {threshold_milli(EMB_DEDUP_T)}
 ),
 sym AS (SELECT from_id AS a, to_id AS b FROM pairs
         UNION SELECT to_id AS a, from_id AS b FROM pairs),
@@ -2492,8 +2488,8 @@ WITH RECURSIVE e AS (
 pairs AS (
   SELECT a.vec_id AS from_id, b.vec_id AS to_id
   FROM e a JOIN e b ON a.vec_id < b.vec_id
-  WHERE CAST(floor(list_cosine_similarity(a.v, b.v) * 1000 + 0.5) AS BIGINT)
-        >= {int(EMB_DEDUP_T * 1000)}
+  WHERE {milli_sql('list_cosine_similarity(a.v, b.v)')}
+        >= {threshold_milli(EMB_DEDUP_T)}
 ),
 sym AS (SELECT from_id AS a, to_id AS b FROM pairs
         UNION SELECT to_id AS a, from_id AS b FROM pairs),
@@ -2621,7 +2617,7 @@ def q_wratio_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_part = spark.sparkContext.defaultParallelism * 2
     wr = pair_scorer_udf("WRatio")(F.col("fk"), F.col("tk")) / 100.0
     pairs = f.repartition(n_part).crossJoin(t).select(
-        "from_id", "to_id", _milli(wr).alias("wr_milli")
+        "from_id", "to_id", milli(wr).alias("wr_milli")
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("wr_milli"), F.asc("to_id")
@@ -2649,8 +2645,7 @@ def q_pr_curve_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         m.crossJoin(F.broadcast(ths))
         .groupBy("threshold_centi")
         .agg(
-            F.floor(F.lit(1000) * F.count(sel) / F.count(F.lit(1)) + F.lit(0.5))
-            .cast("bigint")
+            ratio_milli(F.count(sel), F.count(F.lit(1)))
             .alias("recall_milli"),
             F.coalesce(
                 F.floor(F.avg(sel) + F.lit(0.5)).cast("bigint"), F.lit(-1)
@@ -2659,6 +2654,7 @@ def q_pr_curve_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PR_HITS = "count(*) FILTER (sim_milli >= threshold_centi * 10)"
 ORACLE_PR_CURVE = f"""
 WITH {_tfidf_oracle_cte(TFIDF_MIN_SIM)},
 m AS (
@@ -2668,8 +2664,7 @@ m AS (
 ths AS (SELECT CAST(i AS BIGINT) AS threshold_centi
         FROM generate_series(0, 100) s(i))
 SELECT threshold_centi,
-       CAST(floor(1000 * count(*) FILTER (sim_milli >= threshold_centi * 10)
-                  * 1.0 / count(*) + 0.5) AS BIGINT) AS recall_milli,
+       {ratio_milli_sql(_PR_HITS, 'count(*)')} AS recall_milli,
        COALESCE(CAST(floor(avg(sim_milli)
                     FILTER (sim_milli >= threshold_centi * 10) + 0.5)
                 AS BIGINT), -1) AS avg_prec_milli
@@ -2702,7 +2697,7 @@ def q_editdistance_top1_normalized(spark: SparkSession, sf_dir: str) -> DataFram
     return best.crossJoin(F.broadcast(stats)).select(
         "from_id",
         "to_id",
-        _milli(
+        milli(
             F.when(
                 F.col("hi") != F.col("lo"),
                 (F.col("sim") - F.col("lo")) / (F.col("hi") - F.col("lo")),
@@ -2728,7 +2723,7 @@ best AS (
     FROM pairs) WHERE rnk = 1),
 st AS (SELECT min(sim) AS lo, max(sim) AS hi FROM best)
 SELECT from_id, to_id,
-       {MILLI.format(x='CASE WHEN hi <> lo THEN (sim - lo) / (hi - lo) ELSE 0.0 END')}
+       {milli_sql('CASE WHEN hi <> lo THEN (sim - lo) / (hi - lo) ELSE 0.0 END')}
          AS norm_milli
 FROM best, st
 """
@@ -2997,12 +2992,12 @@ WITH br AS (
   FROM (SELECT unnest({divisors}) AS b)
 )
 SELECT bands, rows,
-       {MILLI.format(x="pow(1.0 / CAST(bands AS DOUBLE),"
-                       " 1.0 / CAST(rows AS DOUBLE))")}
+       {milli_sql("pow(1.0 / CAST(bands AS DOUBLE),"
+                  " 1.0 / CAST(rows AS DOUBLE))")}
          AS curve_threshold_milli,
-       {MILLI.format(x=p_at(t))} AS p_at_target_milli,
-       {MILLI.format(x=p_at(f"{t} - 0.1"))} AS p_below_milli,
-       {MILLI.format(x=p_at(f"{t} + 0.1"))} AS p_above_milli
+       {milli_sql(p_at(t))} AS p_at_target_milli,
+       {milli_sql(p_at(f"{t} - 0.1"))} AS p_below_milli,
+       {milli_sql(p_at(f"{t} + 0.1"))} AS p_above_milli
 FROM br
 """
 
@@ -3029,10 +3024,6 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_blocking_quality() -> str:
     jacc = ORACLE_JACCARD  # truth = the shared exact Jaccard-0.7 pair graph
-    milli = "CAST(floor(round({x}, 3) * 1000 + 0.5) AS BIGINT)"
-    rr = milli.format(x="(tot - nc) / tot")
-    pc = milli.format(x="CAST(nh AS DOUBLE) / CAST(nt AS DOUBLE)")
-    pq = milli.format(x="CAST(nh AS DOUBLE) / CAST(nc AS DOUBLE)")
     return f"""
 WITH cand AS (SELECT from_id, to_id FROM ({ORACLE_SIMHASH})),
 tru AS (SELECT from_id, to_id FROM ({jacc})),
@@ -3045,9 +3036,9 @@ d AS (SELECT count(*) AS n_records,
       FROM documents)
 SELECT n_records, nc AS n_candidate_pairs, nt AS n_true_pairs,
        nh AS n_true_in_candidates,
-       CASE WHEN tot > 0 THEN {rr} END AS reduction_ratio_milli,
-       CASE WHEN nt > 0 THEN {pc} END AS pairs_completeness_milli,
-       CASE WHEN nc > 0 THEN {pq} END AS pairs_quality_milli
+       {ratio_milli_sql('tot - nc', 'tot')} AS reduction_ratio_milli,
+       {ratio_milli_sql('nh', 'nt')} AS pairs_completeness_milli,
+       {ratio_milli_sql('nh', 'nc')} AS pairs_quality_milli
 FROM c, t, h, d
 """
 
@@ -3068,7 +3059,7 @@ def _incremental_cc_pair(spark: SparkSession, sf_dir: str):
     pad = lambda c: F.lpad(F.col(c).cast("string"), 12, "0")
     edges = ranked.where(
         (F.col("rnk") <= CLUSTER_TOP_N)
-        & (F.col("sim_milli") > int(LINK_MIN_SIM * 1000))
+        & (F.col("sim_milli") > threshold_milli(LINK_MIN_SIM))
     )
     is_old = (F.col("from_id") < INCR_SPLIT) & (F.col("to_id") < INCR_SPLIT)
     old_cc = connected_components(
@@ -3126,24 +3117,20 @@ def q_cluster_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_cluster_churn() -> str:
-    milli = "CAST(floor(round({x}, 3) * 1000 + 0.5) AS BIGINT)"
     # two self-contained closures as nested subqueries (each with its own
     # WITH RECURSIVE — the proven blocking_quality nesting pattern; two
     # recursive CTEs sharing one WITH RECURSIVE miscounted in DuckDB)
     full_closure = ORACLE_CLUSTERS
     old_closure = ORACLE_CLUSTERS.replace(
         f"WHERE rnk <= {CLUSTER_TOP_N} AND sim_milli > "
-        f"{int(LINK_MIN_SIM * 1000)}",
+        f"{threshold_milli(LINK_MIN_SIM)}",
         f"WHERE rnk <= {CLUSTER_TOP_N} AND sim_milli > "
-        f"{int(LINK_MIN_SIM * 1000)} "
+        f"{threshold_milli(LINK_MIN_SIM)} "
         f"AND from_id < {INCR_SPLIT} AND to_id < {INCR_SPLIT}",
     )
     # a reformatting of ORACLE_CLUSTERS' WHERE clause would make the
     # replace a silent no-op and the oracle assert churn ≡ 0
     assert old_closure != full_closure, "old-closure substitution no-oped"
-    churn = milli.format(
-        x="CAST(n_moved AS DOUBLE) / CAST(n_records AS DOUBLE)"
-    )
     return f"""
 WITH ra AS (SELECT doc_id AS v, rep_doc_id AS r FROM ({full_closure})),
 ro AS (SELECT doc_id AS v, rep_doc_id AS r FROM ({old_closure})),
@@ -3164,7 +3151,7 @@ agg AS (
   FROM j
 )
 SELECT n_records, n_moved,
-       CASE WHEN n_records > 0 THEN {churn} END AS churn_milli,
+       {ratio_milli_sql('n_moved', 'n_records')} AS churn_milli,
        n_clusters_old, n_clusters_new
 FROM agg
 """
@@ -3229,7 +3216,7 @@ def _multifield_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         scored.select(
-            "from_id", "to_id", _milli(F.col("score")).alias("score_milli")
+            "from_id", "to_id", milli(F.col("score")).alias("score_milli")
         )
         .localCheckpoint(eager=True)
     )
@@ -3291,7 +3278,7 @@ t AS (SELECT p_partkey AS to_id, p_name AS tn,
       FROM part WHERE p_partkey % 2 = 0),
 pairs AS (
   SELECT from_id, to_id,
-         {MILLI.format(x=f"{MF_W_NAME} * jaro_winkler_similarity(fn, tn)"
+         {milli_sql(f"{MF_W_NAME} * jaro_winkler_similarity(fn, tn)"
                          f" + {MF_W_SIZE} * (1.0 -"
                          " CAST(least(abs(fs - ts), 20) AS DOUBLE) / 20.0)"
                          f" + {MF_W_PRICE} * (1.0 -"
@@ -3338,7 +3325,7 @@ def q_monge_elkan_top1(spark: SparkSession, sf_dir: str) -> DataFrame:
         [FieldSim("fn", "tn", 1.0, "monge_elkan")],
     )
     pairs = scored.select(
-        "from_id", "to_id", _milli(F.col("score")).alias("me_milli")
+        "from_id", "to_id", milli(F.col("score")).alias("me_milli")
     )
     w = Window.partitionBy("from_id").orderBy(
         F.desc("me_milli"), F.asc("to_id")
@@ -3362,7 +3349,7 @@ WITH f AS (SELECT p_partkey AS from_id, p_name AS fn, p_type, p_brand
 t AS (SELECT p_partkey AS to_id, p_name AS tn, p_type, p_brand
       FROM part WHERE p_partkey % 2 = 0),
 pairs AS (
-  SELECT from_id, to_id, {MILLI.format(x=_ME_EXPR)} AS me_milli
+  SELECT from_id, to_id, {milli_sql(_ME_EXPR)} AS me_milli
   FROM f JOIN t USING (p_type, p_brand)),
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY from_id

@@ -19,8 +19,8 @@ Serving keeps no kernel of its own. Queries vectorize through the map-side
 kernel (``mapside.vectorize_keys``, the one behind every packed TF-IDF
 vector: clean, shingle, drop out-of-vocabulary terms BEFORE the norm as
 sklearn and the reference's ``re_train=False`` path do), and scores go
-through the dense kernels' half-up quantizer and top-k ranker
-(``dense_cosine.to_milli`` / ``topk_milli``).
+through the engine's score rule and the dense kernels' top-k ranker
+(``functions.milli.to_milli`` / ``dense_cosine.topk_milli``).
 """
 
 from __future__ import annotations
@@ -33,12 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dense_cosine import (
-    fits_broadcast,
-    scatter_rows,
-    to_milli,
-    topk_milli,
-)
+from ..functions.milli import threshold_milli, to_milli
+from ..operators.dense_cosine import fits_broadcast, scatter_rows, topk_milli
 from ..operators.mapside import vectorize_keys, vocab_table
 from ..operators.tfidf import TfidfConfig, TfidfModel
 
@@ -114,7 +110,7 @@ def incremental_match(
     is a stateless mapInPandas either way."""
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(index)
-    min_milli = int(to_milli(min_similarity))
+    min_milli = threshold_milli(min_similarity)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ix: TfidfIndex = bc.value
@@ -184,7 +180,7 @@ def admission_filter(
     (no in-vocabulary n-grams) score 0 and are admitted."""
     spark = docs.sparkSession
     bc = spark.sparkContext.broadcast(index)
-    thr_milli = int(to_milli(threshold))
+    thr_milli = threshold_milli(threshold)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ix: TfidfIndex = bc.value
