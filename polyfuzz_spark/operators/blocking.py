@@ -188,6 +188,17 @@ def minhash_candidates(
     )
 
 
+def lsh_flanks(target_jaccard: float) -> tuple[float, float]:
+    """The flank points ``t ∓ 0.1`` of ``lsh_parameter_plan``, computed in
+    exact decimal and rounded once to a double — what the DuckDB oracle's
+    DECIMAL literal arithmetic gives. Double subtraction would give
+    0.8 − 0.1 = 0.7000000000000001, a different input to the S-curve."""
+    from decimal import Decimal
+
+    t, step = Decimal(repr(float(target_jaccard))), Decimal("0.1")
+    return float(t - step), float(t + step)
+
+
 def lsh_parameter_plan(
     spark,
     num_hashes: int = 64,
@@ -209,6 +220,7 @@ def lsh_parameter_plan(
         [(b, num_hashes // b) for b in divisors], "bands int, rows int"
     )
     t = F.lit(float(target_jaccard))
+    below, above = lsh_flanks(target_jaccard)
     p_at = lambda s: (
         F.lit(1.0)
         - F.pow(
@@ -224,6 +236,6 @@ def lsh_parameter_plan(
             F.lit(1.0) / F.col("rows").cast("double"),
         )).alias("curve_threshold_milli"),
         milli(p_at(t)).alias("p_at_target_milli"),
-        milli(p_at(t - F.lit(0.1))).alias("p_below_milli"),
-        milli(p_at(t + F.lit(0.1))).alias("p_above_milli"),
+        milli(p_at(F.lit(below))).alias("p_below_milli"),
+        milli(p_at(F.lit(above))).alias("p_above_milli"),
     )

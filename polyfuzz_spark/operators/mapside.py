@@ -62,16 +62,78 @@ FIT_SLICE_DOCS: int | None = 1024
 MINHASH_SLICE_DOCS: int | None = 1024
 
 
+def doc_freq_batch(keys: list, cfg: TfidfConfig,
+                   slice_docs: int | None = None) -> pd.DataFrame:
+    """Document frequency over one batch of keys: a (term, pdf_) frame with
+    one row per distinct term — the fit's gram kernel, shared by the
+    map-side fit (one partial per Arrow batch) and the facade's driver
+    tier (one table over the whole fit multiset)."""
+    if cfg.clean_string and cfg.n_gram_range[1] <= 8:
+        # whole-batch: distinct (gram, doc) pairs via one lexsort,
+        # document frequency via run lengths over the gram runs —
+        # integer counts, so identical to the dict accumulation.
+        # Cache-blocked: each ``slice_docs`` slice dedups and
+        # run-counts its own (already ~5x smaller) gram set, and
+        # the per-slice (gram, df) partials re-merge with ONE
+        # final sort-reduce so the shuffle still carries one
+        # partial per batch — df is additive, so counts are
+        # identical to the unsliced lexsort.
+        step = slice_docs or len(keys) or 1
+        pg, pc = [], []
+        for lo in range(0, len(keys), step):
+            parts = list(_iter_gram_windows(keys[lo:lo + step], cfg))
+            if not parts:
+                continue
+            doc_of = np.concatenate([p[0] for p in parts])
+            g = np.concatenate([p[1] for p in parts])
+            order = np.lexsort((doc_of, g))
+            gs, ds = g[order], doc_of[order]
+            first = np.ones(gs.size, dtype=bool)
+            first[1:] = (gs[1:] != gs[:-1]) | (ds[1:] != ds[:-1])
+            gu = gs[first]  # distinct (gram, doc), gram-major
+            run = np.ones(gu.size, dtype=bool)
+            run[1:] = gu[1:] != gu[:-1]
+            starts = np.nonzero(run)[0]
+            pg.append(gu[starts])
+            pc.append(np.diff(np.append(starts, gu.size)))
+        if not pg:
+            return pd.DataFrame({"term": [], "pdf_": []}).astype(
+                {"term": "object", "pdf_": "int64"}
+            )
+        if len(pg) == 1:
+            gu_b, dfc = pg[0], pc[0]
+        else:
+            g_all = np.concatenate(pg)
+            c_all = np.concatenate(pc)
+            order = np.argsort(g_all, kind="stable")
+            g_all, c_all = g_all[order], c_all[order]
+            run = np.ones(g_all.size, dtype=bool)
+            run[1:] = g_all[1:] != g_all[:-1]
+            starts = np.nonzero(run)[0]
+            gu_b = g_all[run]
+            dfc = np.add.reduceat(c_all, starts)
+        return pd.DataFrame({"term": _unpack_u64_terms(gu_b), "pdf_": dfc})
+    from ..functions.pygrams import doc_grams_py
+
+    df_counts: dict[str, int] = {}
+    for key in keys:
+        for g in set(doc_grams_py(key or "", cfg)):
+            df_counts[g] = df_counts.get(g, 0) + 1
+    return pd.DataFrame(
+        {"term": list(df_counts), "pdf_": list(df_counts.values())}
+    ).astype({"term": "object", "pdf_": "int64"})
+
+
 def fit_idf_mapside(docs: DataFrame, key_col: str = "key",
                     cfg: TfidfConfig | None = None,
                     id_col: str = "doc_id") -> TfidfModel:
     """TfidfModel with identical IDF values, document frequency counted
-    map-side: each Arrow batch emits one partial (term, df) dict — the
-    shuffle carries ~|vocab| rows per batch instead of |docs|×|grams|
-    exploded rows, and the gram generation runs in the same Python kernel
-    family as vectorization (the JVM regex-clean + per-gram substring
-    allocation was the single largest stage in the event log: 40 s of the
-    117 s pipeline at 250k docs)."""
+    map-side: each Arrow batch emits one partial (term, df) table
+    (``doc_freq_batch``) — the shuffle carries ~|vocab| rows per batch
+    instead of |docs|×|grams| exploded rows, and the gram generation runs
+    in the same Python kernel family as vectorization (the JVM regex-clean
+    + per-gram substring allocation was the single largest stage in the
+    event log: 40 s of the 117 s pipeline at 250k docs)."""
     cfg = cfg or TfidfConfig()
     n_docs = docs.count()
     bc_cfg = docs.sparkSession.sparkContext.broadcast(
@@ -79,70 +141,9 @@ def fit_idf_mapside(docs: DataFrame, key_col: str = "key",
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pygrams import doc_grams_py
-
         cfg_l, slice_docs = bc_cfg.value
-        batched = cfg_l.clean_string and cfg_l.n_gram_range[1] <= 8
         for pdf in batches:
-            if batched:
-                # whole-batch: distinct (gram, doc) pairs via one lexsort,
-                # document frequency via run lengths over the gram runs —
-                # integer counts, so identical to the dict accumulation.
-                # Cache-blocked: each ``slice_docs`` slice dedups and
-                # run-counts its own (already ~5x smaller) gram set, and
-                # the per-slice (gram, df) partials re-merge with ONE
-                # final sort-reduce so the shuffle still carries one
-                # partial per batch — df is additive, so counts are
-                # identical to the unsliced lexsort.
-                keys_all = list(pdf[key_col])
-                step = slice_docs or len(keys_all) or 1
-                pg, pc = [], []
-                for lo in range(0, len(keys_all), step):
-                    parts = list(
-                        _iter_gram_windows(keys_all[lo:lo + step], cfg_l)
-                    )
-                    if not parts:
-                        continue
-                    doc_of = np.concatenate([p[0] for p in parts])
-                    g = np.concatenate([p[1] for p in parts])
-                    order = np.lexsort((doc_of, g))
-                    gs, ds = g[order], doc_of[order]
-                    first = np.ones(gs.size, dtype=bool)
-                    first[1:] = (gs[1:] != gs[:-1]) | (ds[1:] != ds[:-1])
-                    gu = gs[first]  # distinct (gram, doc), gram-major
-                    run = np.ones(gu.size, dtype=bool)
-                    run[1:] = gu[1:] != gu[:-1]
-                    starts = np.nonzero(run)[0]
-                    pg.append(gu[starts])
-                    pc.append(np.diff(np.append(starts, gu.size)))
-                if not pg:
-                    yield pd.DataFrame({"term": [], "pdf_": []}).astype(
-                        {"term": "object", "pdf_": "int64"}
-                    )
-                    continue
-                if len(pg) == 1:
-                    gu_b, dfc = pg[0], pc[0]
-                else:
-                    g_all = np.concatenate(pg)
-                    c_all = np.concatenate(pc)
-                    order = np.argsort(g_all, kind="stable")
-                    g_all, c_all = g_all[order], c_all[order]
-                    run = np.ones(g_all.size, dtype=bool)
-                    run[1:] = g_all[1:] != g_all[:-1]
-                    starts = np.nonzero(run)[0]
-                    gu_b = g_all[run]
-                    dfc = np.add.reduceat(c_all, starts)
-                yield pd.DataFrame(
-                    {"term": _unpack_u64_terms(gu_b), "pdf_": dfc}
-                )
-                continue
-            df_counts: dict[str, int] = {}
-            for key in pdf[key_col]:
-                for g in set(doc_grams_py(key or "", cfg_l)):
-                    df_counts[g] = df_counts.get(g, 0) + 1
-            yield pd.DataFrame(
-                {"term": list(df_counts), "pdf_": list(df_counts.values())}
-            )
+            yield doc_freq_batch(list(pdf[key_col]), cfg_l, slice_docs)
 
     partials = ensure_min_partitions(docs.select(key_col)).mapInPandas(
         gen, schema="term string, pdf_ long"
@@ -160,29 +161,40 @@ def fit_idf_mapside(docs: DataFrame, key_col: str = "key",
 
 
 def vocab_table(model: TfidfModel) -> tuple[dict, tuple | None]:
-    """The vectorizer's vocabulary, collected once from ``model.idf``:
-    ``({term: (tid, idf)}, vpack)``. tid is the term's rank in SORTED-TERM
-    order, the dense id every packed vector and serving index shares.
+    """The vectorizer's vocabulary, collected once from ``model.idf``
+    (``vocab_from_idf``)."""
+    rows = model.idf.collect()
+    return vocab_from_idf(
+        [r["term"] for r in rows], [r["idf"] for r in rows], model.config
+    )
+
+
+def vocab_from_idf(terms: list, idfs: list,
+                   cfg: TfidfConfig) -> tuple[dict, tuple | None]:
+    """``({term: (tid, idf)}, vpack)`` from an IDF table. tid is the
+    term's rank in SORTED-TERM order, the dense id every packed vector and
+    serving index shares.
 
     ``vpack`` is the batched kernel's lookup table: the vocab's exact u64
     gram packings sorted for searchsorted, the tid and idf of each. It is
     None (route every batch through the per-doc dict) unless every term
     packs exactly, which needs cleaned text and n-grams of ≤ 8 chars."""
-    rows = sorted(model.idf.collect(), key=lambda r: r["term"])
-    vocab = {r["term"]: (i, r["idf"]) for i, r in enumerate(rows)}
-    cfg = model.config
+    order = sorted(range(len(terms)), key=terms.__getitem__)
+    terms = [terms[i] for i in order]
+    idfs = [idfs[i] for i in order]
+    vocab = {t: (i, v) for i, (t, v) in enumerate(zip(terms, idfs))}
     if not (
         cfg.clean_string
         and cfg.n_gram_range[1] <= 8
-        and all(len(r["term"]) <= 8 for r in rows)
+        and all(len(t) <= 8 for t in terms)
     ):
         return vocab, None
-    vkeys = _pack_grams_u64([r["term"] for r in rows])
+    vkeys = _pack_grams_u64(terms)
     vorder = np.argsort(vkeys)
     return vocab, (
         vkeys[vorder],
         vorder.astype(np.int64),  # tid of the k-th smallest key
-        np.array([r["idf"] for r in rows], dtype=np.float64)[vorder],
+        np.array(idfs, dtype=np.float64)[vorder],
     )
 
 

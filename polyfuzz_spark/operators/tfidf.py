@@ -11,7 +11,10 @@ multiset ``to_list + from_list``:
 * transform drops out-of-vocabulary terms **before** normalization.
 
 All stages are DataFrame-native (explode → groupBy → window); the only
-actions are two scalar ``count()``s at fit time. At cluster scale the
+action is ``fit_tfidf``'s scalar ``count()`` of the fit corpus (N). The
+facade's small fits skip this module: ``TFIDFMatcher``'s driver tier
+counts document frequency with the map-side gram kernel and evaluates
+the same IDF expression. At cluster scale the
 (doc_id, term) explode shuffles on term for the df-aggregation — a classic
 map-side-combinable count, so partial aggregation keeps the shuffle small
 (|vocab| per mapper, not |rows|).

@@ -8,7 +8,11 @@ match.
 
 Spark: row_number window partitioned by from_id. Tie-break: numpy
 argpartition order is unspecified; we impose a deterministic ``to_id ASC``
-and use the same rule in all oracles (documented divergence).
+and use the same rule in all oracles (documented divergence). The window
+ranks on the similarity rounded to 9 decimals, so two identical vectors
+tie whatever order their products were summed in (the term join sums in
+shuffle order, and duplicate to-strings then differ in the last ulp);
+1e-9 is far above that noise and far below the reported 1e-3.
 """
 
 from __future__ import annotations
@@ -33,7 +37,9 @@ def top_n_matches(
     """
     if min_similarity > 0:
         pairs = pairs.where(F.col("sim") >= F.lit(min_similarity))
-    w = Window.partitionBy("from_id").orderBy(F.desc("sim"), F.asc("to_id"))
+    w = Window.partitionBy("from_id").orderBy(
+        F.round("sim", 9).desc(), F.asc("to_id")
+    )
     ranked = (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_n)

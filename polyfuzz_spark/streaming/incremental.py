@@ -26,7 +26,7 @@ through the engine's score rule and the dense kernels' top-k ranker
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -48,7 +48,13 @@ class TfidfIndex:
     ``vocab`` ({term: (tid, idf)}) and ``vpack`` are the map-side
     vectorizer's vocabulary table (``mapside.vocab_table``); ``vpack``
     None routes ``vectorize_keys`` to its per-doc fallback. ``to_mat``
-    rows sit on the same sorted-term tids."""
+    rows sit on the same sorted-term tids.
+
+    A served index is read-only: its first serving call broadcasts it
+    once (``_served``) and every later call on the same object reuses
+    that broadcast, so changing a field in place would not reach the
+    executors. Derive a new index with ``dataclasses.replace`` instead;
+    the copy gets its own broadcast."""
 
     vocab: dict
     idf: np.ndarray          # (dim,)
@@ -56,6 +62,23 @@ class TfidfIndex:
     to_mat: np.ndarray       # (n_to, dim) L2-normalized tf-idf rows
     config: TfidfConfig
     vpack: tuple | None = None
+    # (SparkContext, Broadcast) of the first serving call; not pickled
+    _bc: tuple | None = field(default=None, init=False, repr=False,
+                              compare=False)
+
+    def __getstate__(self):
+        state = self.__dict__.copy()
+        state.pop("_bc", None)
+        return state
+
+
+def _served(index: TfidfIndex, sc):
+    """The one broadcast of ``index`` on ``sc``, made on first use. One
+    per call would leave a copy of the index in ``spark.local.dir`` for
+    every call (broadcasts are never destroyed here)."""
+    if index._bc is None or index._bc[0] is not sc:
+        index._bc = (sc, sc.broadcast(index))
+    return index._bc[1]
 
 
 def _vectorize_rows(keys: list, ix: TfidfIndex) -> tuple[np.ndarray, np.ndarray]:
@@ -109,7 +132,7 @@ def incremental_match(
     fitted corpus. ``docs`` may be a batch OR streaming DataFrame — the plan
     is a stateless mapInPandas either way."""
     spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(index)
+    bc = _served(index, spark.sparkContext)
     min_milli = threshold_milli(min_similarity)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -179,7 +202,7 @@ def admission_filter(
     DataFrames with no watermark); documents that vectorize to nothing
     (no in-vocabulary n-grams) score 0 and are admitted."""
     spark = docs.sparkSession
-    bc = spark.sparkContext.broadcast(index)
+    bc = _served(index, spark.sparkContext)
     thr_milli = threshold_milli(threshold)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

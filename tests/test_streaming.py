@@ -681,3 +681,47 @@ def test_serving_rounds_an_exact_half_milli_up(spark):
     verdict = admission_filter(docs, index, threshold=0.313).toPandas()
     assert verdict.best_sim_milli.tolist() == [spark_milli]
     assert not verdict.admitted.any()
+
+
+def test_serving_broadcasts_each_index_once(spark, fitted, monkeypatch):
+    """Repeated serving calls on one index share one broadcast (a
+    broadcast per call left a copy of the index in ``spark.local.dir``
+    for every call); a ``dataclasses.replace`` copy gets its own, and the
+    index still pickles without it."""
+    import dataclasses
+    import pickle
+
+    from pyspark import SparkContext
+
+    from polyfuzz_spark.streaming.incremental import (
+        TfidfIndex,
+        admission_filter,
+    )
+
+    model, to_vec, _ = fitted
+    index = build_index(model, to_vec)
+    made = []
+    real = SparkContext.broadcast
+
+    def spy(self, value):
+        if isinstance(value, TfidfIndex):
+            made.append(value)
+        return real(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", spy)
+    docs = lists_to_df(spark, NEW_DOCS)
+    first = _canon(incremental_match(docs, index, top_n=2).toPandas())
+    for _ in range(3):
+        again = _canon(incremental_match(docs, index, top_n=2).toPandas())
+        pd.testing.assert_frame_equal(first, again)
+        admission_filter(docs, index, threshold=0.5).collect()
+    assert made == [index]
+
+    copy = dataclasses.replace(index)
+    admission_filter(docs, copy, threshold=0.5).collect()
+    incremental_match(docs, copy).collect()
+    assert len(made) == 2 and made[1] is copy
+
+    back = pickle.loads(pickle.dumps(index))
+    assert back._bc is None
+    assert len(pickle.dumps(index)) == len(pickle.dumps(copy))
