@@ -106,8 +106,9 @@ def enforce_pair_budget(
     → ≥2 (both apply at join time, so the band table is reused, not
     recomputed). ``to_bands`` measures a two-sided join instead of the
     self-join. Returns the (possibly demoted) knob dict; ``stats``
-    receives the measured counts for manifests. Callers apply this only
-    to AUTO-resolved knobs — explicit caller knobs are a contract."""
+    receives the measured counts and the knobs the join runs with. The
+    gate runs inside ``mapside.candidates_from_bands(pair_budget=...)``,
+    only for AUTO-resolved knobs — explicit caller knobs are a contract."""
     if budget is None:
         budget = CANDIDATE_PAIR_BUDGET  # read at call time (testable)
     measured = capped_pair_count(bands, knobs.get("max_bucket_size"), to_bands)
@@ -133,8 +134,11 @@ def enforce_pair_budget(
             )
     if stats is not None:
         stats["capped_pairs_at_resolved"] = measured
+        stats["measured_pairs"] = measured
         stats["pair_budget"] = budget
         stats["demoted"] = demoted
+        stats["max_bucket_size"] = out["max_bucket_size"]
+        stats["min_shared_bands"] = out["min_shared_bands"]
         if demoted:
             stats["capped_pairs_at_demoted"] = capped_pair_count(
                 bands, out["max_bucket_size"], to_bands

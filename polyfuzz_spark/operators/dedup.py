@@ -2,7 +2,10 @@
 
 Exact (hash-groupBy), n-gram Jaccard (exact set similarity via term join),
 MinHash-LSH near-dup (banded candidates + exact verification), and SimHash.
-All candidate generation is JVM-side; no UDFs anywhere in this module.
+Gram tables, verify joins and SimHash are JVM-side; MinHash band keys come
+from the map-side kernel (``mapside.minhash_bands_mapside``, through
+``blocking.minhash_candidates``), and the small-vocabulary dense routes
+score in Arrow batch kernels.
 
 Scale shape: exact dedup is one map-side-combinable groupBy on a hash key;
 jaccard pairs join on shared n-grams (same sparsity argument as the cosine
@@ -41,6 +44,15 @@ def exact_dup_groups(
             F.min(id_col).alias("min_doc_id"),
         )
         .where(F.col("n_docs") > 1)
+    )
+
+
+def raw_shingles(n: int) -> TfidfConfig:
+    """The dedup shingle contract as a banding config: raw (uncleaned)
+    char n-grams of exactly n, spaces kept — the grams ``_distinct_grams``
+    verifies, so candidates and verify see the same sets."""
+    return TfidfConfig(
+        n_gram_range=(n, n), clean_string=False, remove_space_ngrams=False
     )
 
 
@@ -609,6 +621,53 @@ def ngram_containment_pairs(
     )
 
 
+def _verified_jaccard(cands: DataFrame, g: DataFrame,
+                      threshold: float) -> DataFrame:
+    """(from_id, to_id, jaccard_milli) for the candidate pairs whose exact
+    n-gram Jaccard over the distinct gram table ``g`` (doc_id, term) is ≥
+    ``threshold`` — the banded routes' verify, so precision stays 1.
+
+    Merge hints: the gram table reaches these joins through an explode
+    (Generate), whose size estimate keeps the CHILD's sizeInBytes — a
+    systematic ~grams-per-doc× undercount that lets the static planner
+    pick BroadcastHashJoin on a table that is actually GiB-scale (the
+    localCheckpoint originStats inherit the same estimate; observed as a
+    driver OOM at the 250k-entity snapshot bench). The verify only runs on
+    the LARGE-vocab route, where gram/sizes tables are big by
+    construction, so sort-merge is always the right plan here."""
+    sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
+    ga = g.select(F.col("doc_id").alias("from_id"), "term").hint("merge")
+    gb = g.select(
+        F.col("doc_id").alias("gb_id"), F.col("term").alias("t_b")
+    ).hint("merge")
+    inter = (
+        cands.join(ga, "from_id")
+        .join(
+            gb,
+            (F.col("to_id") == F.col("gb_id")) & (F.col("term") == F.col("t_b")),
+        )
+        .groupBy("from_id", "to_id")
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sa = sizes.select(
+        F.col("doc_id").alias("from_id"), F.col("n_grams").alias("na")
+    ).hint("merge")
+    sb = sizes.select(
+        F.col("doc_id").alias("to_id"), F.col("n_grams").alias("nb")
+    ).hint("merge")
+    union = F.col("na") + F.col("nb") - F.col("inter")
+    return (
+        inter.join(sa, "from_id")
+        .join(sb, "to_id")
+        .where(F.col("inter") / union >= F.lit(threshold))
+        .select(
+            "from_id",
+            "to_id",
+            ratio_milli("inter", union).alias("jaccard_milli"),
+        )
+    )
+
+
 def minhash_near_dups(
     docs: DataFrame,
     key_col: str = "key",
@@ -641,54 +700,13 @@ def minhash_near_dups(
     )
     if routed is not None:
         return routed
-    # large vocab: g0 arrives eagerly checkpointed — it feeds all three
-    # verify consumers below (sizes + both join sides)
-    cfg = TfidfConfig(n_gram_range=(n, n), clean_string=False,
-                      remove_space_ngrams=False)
+    # large vocab: g0 arrives eagerly checkpointed, and the
+    # eligibility-checked gram table IS the verify input
     cands = minhash_candidates(
-        docs, None, key_col, cfg, num_hashes=num_hashes, bands=bands,
-        max_bucket_size=max_bucket_size,
+        docs, None, key_col, raw_shingles(n), num_hashes=num_hashes,
+        bands=bands, max_bucket_size=max_bucket_size,
     ).where(F.col("from_id") < F.col("to_id"))
-    g = g0  # the eligibility-checked gram table IS the verify input
-    # merge hints: the gram table reaches these joins through an explode
-    # (Generate), whose size estimate keeps the CHILD's sizeInBytes — a
-    # systematic ~grams-per-doc× undercount that lets the static planner
-    # pick BroadcastHashJoin on a table that is actually GiB-scale (the
-    # localCheckpoint originStats inherit the same estimate).  This verify
-    # path only runs on the LARGE-vocab route, where gram/sizes tables are
-    # big by construction, so sort-merge is always the right plan here.
-    sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-    ga = g.select(F.col("doc_id").alias("from_id"), "term").hint("merge")
-    gb = g.select(
-        F.col("doc_id").alias("gb_id"), F.col("term").alias("t_b")
-    ).hint("merge")
-    inter = (
-        cands.join(ga, "from_id")
-        .join(
-            gb,
-            (F.col("to_id") == F.col("gb_id")) & (F.col("term") == F.col("t_b")),
-        )
-        .groupBy("from_id", "to_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("from_id"), F.col("n_grams").alias("na")
-    ).hint("merge")
-    sb = sizes.select(
-        F.col("doc_id").alias("to_id"), F.col("n_grams").alias("nb")
-    ).hint("merge")
-    union = F.col("na") + F.col("nb") - F.col("inter")
-    jac = F.col("inter") / union
-    return (
-        inter.join(sa, "from_id")
-        .join(sb, "to_id")
-        .where(jac >= F.lit(threshold))
-        .select(
-            "from_id",
-            "to_id",
-            ratio_milli("inter", union).alias("jaccard_milli"),
-        )
-    )
+    return _verified_jaccard(cands, g0, threshold)
 
 
 def simhash_signatures(
@@ -990,7 +1008,7 @@ def dedup_against(
         # knobs) + exact Jaccard verify off the ONE checkpointed gram
         # table (g carries parity-tagged ids; candidates are remapped into
         # that space)
-        from .adaptive import resolve_blocking_knobs
+        from .adaptive import CANDIDATE_PAIR_BUDGET, resolve_blocking_knobs
 
         kw = {} if max_bucket_size is _KNOB_UNSET else {
             "max_bucket_size": max_bucket_size
@@ -998,12 +1016,8 @@ def dedup_against(
         knobs = resolve_blocking_knobs(
             cd.count(), num_hashes=num_hashes, bands=bands, **kw
         )
-        cfg = TfidfConfig(n_gram_range=(n, n), clean_string=False,
-                          remove_space_ngrams=False)
-        from .adaptive import CANDIDATE_PAIR_BUDGET
-
         cands = minhash_candidates(
-            nd_surv, cd, "key", cfg,
+            nd_surv, cd, "key", raw_shingles(n),
             # auto-resolved knobs → measured fan-out gate (BASELINE
             # post-mortem: doc-count regimes miss band concentration);
             # an explicitly-passed cap is a contract → no gate
@@ -1013,33 +1027,8 @@ def dedup_against(
             (F.col("from_id") * 2 + 1).alias("from_id"),
             (F.col("to_id") * 2).alias("to_id"),
         )
-        # merge hints for the same reason as minhash_near_dups' verify:
-        # gram/sizes stats are explode-undercounted and this branch only
-        # fires on the large-vocab route — a static BroadcastHashJoin here
-        # is a GiB-scale driver collect waiting to happen (observed at the
-        # 250k-entity snapshot bench before the hints).
-        sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
-        ga = g.select(F.col("doc_id").alias("from_id"), "term").hint("merge")
-        gb = g.select(F.col("doc_id").alias("gb_id"),
-                      F.col("term").alias("t_b")).hint("merge")
-        inter = (
-            cands.join(ga, "from_id")
-            .join(gb, (F.col("to_id") == F.col("gb_id"))
-                  & (F.col("term") == F.col("t_b")))
-            .groupBy("from_id", "to_id")
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-        jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
         near_ids = (
-            inter.join(
-                sizes.select(F.col("doc_id").alias("from_id"),
-                             F.col("n_grams").alias("na")).hint("merge"),
-                "from_id")
-            .join(
-                sizes.select(F.col("doc_id").alias("to_id"),
-                             F.col("n_grams").alias("nb")).hint("merge"),
-                "to_id")
-            .where(jac >= F.lit(threshold))
+            _verified_jaccard(cands, g, threshold)
             .select(F.expr("(from_id - 1) DIV 2").alias("doc_id"))
             .distinct()
         )

@@ -1,9 +1,9 @@
 """Map-side vectorization + MinHash banding (the zero-extra-shuffle scale
-path for the ER pipeline).
+path).
 
 Profiling at 250k docs showed the two relational pre-stages dominating and
 not scaling: ``doc_terms``'s (doc, term) groupBy shuffles 36M rows into 36M
-groups just to count term frequencies, and the JVM MinHash computes 64
+groups just to count term frequencies, and a JVM MinHash computed 64
 string hashes per exploded gram row (3.2B hashes). Both are per-document
 pure functions of the content, so they belong on the map side:
 
@@ -20,13 +20,13 @@ pure functions of the content, so they belong on the map side:
   ``tfidf_dense_topk_packed_two`` kernel. The streaming serving index
   (``streaming/incremental.py``) vectorizes its queries with the same
   two helpers.
-* ``minhash_bands_mapside`` — n-grams (n ≤ 8 chars) pack EXACTLY into
-  uint64 (no hash collisions at all); num_hashes affine maps
+* ``minhash_bands_mapside`` — the library's ONLY MinHash generator.
+  n-grams (n ≤ 8 chars) pack EXACTLY into uint64; num_hashes affine maps
   ``a_i · g + b_i`` over 2⁶⁴ (multiply-shift family, odd ``a_i``) give the
   per-doc minima vectorized in numpy; band keys combine r minima with the
   same affine trick. Output: (doc_id, band, band_key) — the banded join,
-  bucket caps, and ≥k-shared-bands logic stay in
-  ``blocking.candidates_from_bands``.
+  bucket caps, ≥k-shared-bands logic and pair-budget gate are
+  ``candidates_from_bands``; every candidate set bands through the two.
 
 Determinism: the hash family derives from ``numpy.random.default_rng(seed)``
 (stable across runs and machines) and gram packing is exact — required for
@@ -445,20 +445,42 @@ def _iter_gram_windows(
         yield doc_of, acc[keep]
 
 
+def _minhash_gram_pairs(
+    keys: list, cfg: TfidfConfig
+) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """``(doc_of, gram_u64)`` pairs for the MinHash kernel: the exact byte
+    windows of ``_iter_gram_windows`` where it applies (cleaned text,
+    n ≤ 8); otherwise — the raw-shingle dedup contract — each doc's
+    distinct ``doc_grams_py`` set packed by ``_pack_grams_u64``."""
+    if cfg.clean_string and cfg.n_gram_range[1] <= 8:
+        yield from _iter_gram_windows(keys, cfg)
+        return
+    from ..functions.pygrams import doc_grams_py
+
+    sets = [set(doc_grams_py(k or "", cfg)) for k in keys]
+    doc_of = np.repeat(
+        np.arange(len(keys), dtype=np.int64),
+        np.array([len(g) for g in sets], dtype=np.int64),
+    )
+    if doc_of.size:
+        yield doc_of, _pack_grams_u64([g for gs in sets for g in gs])
+
+
 def _minhash_sigs_batched(
     keys: list, cfg: TfidfConfig, A: np.ndarray, B: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
     """Whole-batch MinHash signatures: (kept_doc_idx, sig[k, num_hashes]).
 
     Per-doc column minima via ``np.minimum.reduceat`` over doc segments of
-    the flat gram array. MinHash minima over the gram MULTISET equal minima
-    over the distinct set, so signatures are bit-identical to the per-doc
-    path (same packing, same hash family)."""
+    the flat gram array (``_minhash_gram_pairs``). MinHash minima over the
+    gram MULTISET equal minima over the distinct set, so signatures are
+    bit-identical to a per-doc ``min`` over ``_pack_grams_u64`` of the
+    doc's distinct grams (same packing, same hash family)."""
     n_docs = len(keys)
     num_hashes = len(A)
     sig = np.full((n_docs, num_hashes), _U64_MASK, dtype=np.uint64)
     any_grams = np.zeros(n_docs, dtype=bool)
-    for doc_of, g in _iter_gram_windows(keys, cfg):
+    for doc_of, g in _minhash_gram_pairs(keys, cfg):
         # dedup (doc, gram) before hashing: code-like text repeats grams
         # ~5x, and the minima are identical over the distinct set — one
         # lexsort here saves that factor across all num_hashes passes
@@ -492,9 +514,10 @@ def minhash_bands_mapside(
 ) -> DataFrame:
     """(doc_id, band, band_key) — banded MinHash computed per document in
     numpy; the only shuffle left in blocking is the band-key equi-join.
-    Default (cleaned, n ≤ 8) configs take the whole-batch reduceat kernel
-    (``_minhash_sigs_batched``); others fall back to the per-doc loop with
-    the same hash family, so band keys are identical either way."""
+    Docs without a single gram emit no rows. One whole-batch reduceat
+    kernel (``_minhash_sigs_batched``) serves every config: cleaned n ≤ 8
+    text reads exact byte windows, other configs (the raw-shingle dedup
+    contract) each doc's packed distinct grams."""
     cfg = cfg or TfidfConfig()
     rows_per_band = num_hashes // bands
     rng = np.random.default_rng(seed)
@@ -504,81 +527,51 @@ def minhash_bands_mapside(
     A2 = (rng.integers(0, 2**63, size=rows_per_band, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
     spark = docs.sparkSession
     id_ddl = id_type(docs, id_col)
-    batched = cfg.clean_string and cfg.n_gram_range[1] <= 8
     bc = spark.sparkContext.broadcast(
-        (A, B, A2, cfg, bands, rows_per_band, batched, MINHASH_SLICE_DOCS)
+        (A, B, A2, cfg, bands, rows_per_band, MINHASH_SLICE_DOCS)
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.pygrams import doc_grams_py
-
-        A_l, B_l, A2_l, cfg_l, n_bands, rpb, batched_l, slice_docs = bc.value
+        A_l, B_l, A2_l, cfg_l, n_bands, rpb, slice_docs = bc.value
         for pdf in batches:
-            if batched_l:
-                # cache-blocked per-slice signatures (per-doc independent
-                # minima → concatenation is bit-identical to one call)
-                keys_all = list(pdf[key_col])
-                step = slice_docs or len(keys_all) or 1
-                sl = [
-                    _minhash_sigs_batched(
-                        keys_all[lo:lo + step], cfg_l, A_l, B_l
-                    )
-                    for lo in range(0, len(keys_all), step)
-                ]
-                sl = [(i + lo, s) for (i, s), lo in zip(
-                    sl, range(0, len(keys_all), step)
-                )]
-                idx = np.concatenate([i for i, _ in sl]) if sl else (
-                    np.empty(0, dtype=np.int64)
+            # cache-blocked per-slice signatures (per-doc independent
+            # minima → concatenation is bit-identical to one call)
+            keys = list(pdf[key_col])
+            step = slice_docs or len(keys) or 1
+            parts = []
+            for lo in range(0, len(keys), step):
+                i, s = _minhash_sigs_batched(
+                    keys[lo:lo + step], cfg_l, A_l, B_l
                 )
-                sigs = np.concatenate([s for _, s in sl]) if sl else (
-                    np.empty((0, len(A_l)), dtype=np.uint64)
-                )
-                if not len(idx):
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": id_series([], id_ddl),
-                            "band": pd.Series([], dtype="int32"),
-                            "band_key": pd.Series([], dtype="int64"),
-                        }
-                    )
-                    continue
-                with np.errstate(over="ignore"):
-                    bk = (
-                        sigs.reshape(-1, n_bands, rpb) * A2_l[None, None, :]
-                    ).sum(axis=2).astype(np.int64)
-                dids = pdf[id_col].to_numpy()[idx]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": np.repeat(dids, n_bands),
-                        "band": np.tile(
-                            np.arange(n_bands, dtype=np.int32), len(idx)
-                        ),
-                        "band_key": bk.ravel(),
-                    }
-                )
-                continue
-            out_id, out_band, out_key = [], [], []
-            for did, key in zip(pdf[id_col], pdf[key_col]):
-                grams = list(set(doc_grams_py(key or "", cfg_l)))
-                g = _pack_grams_u64(grams)
-                if not len(g):
-                    continue
-                with np.errstate(over="ignore"):
-                    # (n_grams, num_hashes) affine over 2^64 → column minima
-                    sig = (g[:, None] * A_l[None, :] + B_l[None, :]).min(axis=0)
-                    bk = (
-                        (sig.reshape(n_bands, rpb) * A2_l[None, :]).sum(axis=1)
-                    ).astype(np.int64)
-                out_id.extend([did] * n_bands)
-                out_band.extend(range(n_bands))
-                out_key.extend(bk)
+                parts.append((i + lo, s))
+            idx = np.concatenate(
+                [i for i, _ in parts] or [np.empty(0, dtype=np.int64)]
+            )
+            sigs = np.concatenate(
+                [s for _, s in parts]
+                or [np.empty((0, len(A_l)), dtype=np.uint64)]
+            )
+            with np.errstate(over="ignore"):
+                bk = (
+                    sigs.reshape(-1, n_bands, rpb) * A2_l[None, None, :]
+                ).sum(axis=2).astype(np.int64)
+            # explicit dtypes: a batch whose docs are ALL gram-less yields
+            # zero rows, and Arrow must still see the declared id type
             yield pd.DataFrame(
-                {"doc_id": out_id, "band": out_band, "band_key": out_key}
+                {
+                    "doc_id": id_series(
+                        np.repeat(pdf[id_col].to_numpy()[idx], n_bands),
+                        id_ddl,
+                    ),
+                    "band": np.tile(
+                        np.arange(n_bands, dtype=np.int32), len(idx)
+                    ),
+                    "band_key": bk.ravel(),
+                }
             )
 
     return ensure_min_partitions(docs.select(id_col, key_col)).mapInPandas(
-        gen, schema=f"doc_id {id_type(docs, id_col)}, band int, band_key long"
+        gen, schema=f"doc_id {id_ddl}, band int, band_key long"
     )
 
 
@@ -663,6 +656,19 @@ def _salted_sides(
     return f, t
 
 
+def _cap_buckets(bands_df: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    if not max_bucket_size:
+        return bands_df
+    sizes = bands_df.groupBy("band", "band_key").agg(
+        F.count(F.lit(1)).alias("bucket_n")
+    )
+    return (
+        bands_df.join(sizes, ["band", "band_key"])
+        .where(F.col("bucket_n") <= max_bucket_size)
+        .drop("bucket_n")
+    )
+
+
 def candidates_from_bands(
     f_bands: DataFrame,
     t_bands: DataFrame | None = None,
@@ -671,9 +677,11 @@ def candidates_from_bands(
     emit_both: bool = True,
     hot_bucket: str = "drop",
     max_salt: int = 16,
+    pair_budget: int | None = None,
+    budget_stats: dict | None = None,
 ) -> DataFrame:
-    """Banded equi-join → (from_id, to_id) candidates; shared with the JVM
-    band generator. Self mode when t_bands is None (diagonal excluded).
+    """Banded equi-join → (from_id, to_id) candidates. Self mode when
+    t_bands is None (diagonal excluded).
 
     ``emit_both=False`` (self mode only) returns each unordered pair ONCE
     (from_id < to_id) — for symmetric scorers, which can score half the
@@ -684,17 +692,35 @@ def candidates_from_bands(
     ``hot_bucket``: what happens to buckets over ``max_bucket_size`` —
     ``"drop"`` (default; the documented recall tradeoff) or ``"salt"``
     (recall-preserving up to cap×``max_salt`` members per bucket, see
-    ``_salted_sides``)."""
-    from .blocking import _cap_buckets
+    ``_salted_sides``).
 
+    ``pair_budget``: set by callers whose knobs were AUTO-resolved
+    (explicit knobs are a contract). The join's output is MEASURED off the
+    materialized band tables first, and the cap/min-shared demote when it
+    is over budget (``adaptive.enforce_pair_budget``, which fills
+    ``budget_stats``): doc-count regimes cannot see band-key concentration
+    (BASELINE.md's 124k-doc post-mortem: 421M pairs under the permissive
+    cap)."""
     if hot_bucket not in ("drop", "salt"):
         raise ValueError(f"hot_bucket must be 'drop' or 'salt', got {hot_bucket!r}")
-    # materialize once: the band rows feed the bucket-size dimension AND
-    # both join sides — without this the Python band kernel re-runs per use
+    # materialize once: the band rows feed the budget gate, the
+    # bucket-size dimension AND both join sides — without this the Python
+    # band kernel re-runs per use
     f_bands = f_bands.localCheckpoint(eager=True)
     self_mode = t_bands is None
     if not self_mode:
         t_bands = t_bands.localCheckpoint(eager=True)
+    if pair_budget is not None:
+        from .adaptive import enforce_pair_budget
+
+        knobs = enforce_pair_budget(
+            f_bands,
+            {"max_bucket_size": max_bucket_size,
+             "min_shared_bands": min_shared_bands},
+            pair_budget, budget_stats, to_bands=t_bands,
+        )
+        max_bucket_size = knobs["max_bucket_size"]
+        min_shared_bands = knobs["min_shared_bands"]
     # explicit partition count for the banded self-join: its OUTPUT is
     # quadratic in bucket size while its input is ~20 B/row, so AQE's
     # input-size coalescing would concentrate the expansion on few tasks

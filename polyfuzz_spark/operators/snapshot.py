@@ -11,8 +11,9 @@ content ever being read again:
     {path}/bands/     (doc_id, band, band_key)      — banded MinHash keys
     {path}/grams/     (doc_id, gram_key bigint)     — distinct hashed
                                                       n-gram sets (verify)
-    {path}/manifest.json — shingle n, num_hashes, bands, seed, safety
-                           knobs (size-resolved at build), row counts
+    {path}/manifest.json — format_version, shingle n, num_hashes,
+                           bands, seed, safety knobs (size-resolved at
+                           build), row counts
 
 Index bytes are O(corpus tokens) with 8-byte gram keys (the string grams
 are never stored — same xxhash64 asymmetry as ``decontam.gram_keys``; a
@@ -25,6 +26,11 @@ each snapshot costs one linear pass over the new data, never a corpus
 re-read. The batch side recomputes its own shas/bands/gram keys with the
 manifest's frozen knobs (num_hashes/bands/seed must match or band keys
 are incomparable — the manifest is the contract).
+
+Band keys come from ``mapside.minhash_bands_mapside``, the one MinHash
+family. ``format_version`` stamps that band format: an index with another
+or no stamp (an unstamped one holds the former JVM xxhash64 band keys)
+would silently join nothing, so ``load_manifest`` refuses it.
 
 Plan shape at query time: three equi-joins (sha semi-join; banded
 candidate join via ``candidates_from_bands`` with the index bands as the
@@ -40,10 +46,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .blocking import band_keys, minhash_signatures
-from .tfidf import TfidfConfig
+from .dedup import raw_shingles
+from .mapside import candidates_from_bands, minhash_bands_mapside
 
 _MANIFEST = "manifest.json"
+# band format of the index artifacts; bump when band keys change
+FORMAT_VERSION = 2
 
 
 def _artifacts(path: str) -> dict[str, str]:
@@ -52,13 +60,6 @@ def _artifacts(path: str) -> dict[str, str]:
         "bands": os.path.join(path, "bands"),
         "grams": os.path.join(path, "grams"),
     }
-
-
-def _cfg(n: int) -> TfidfConfig:
-    # raw char shingles, matching dedup_against's _distinct_grams contract
-    return TfidfConfig(
-        n_gram_range=(n, n), clean_string=False, remove_space_ngrams=False
-    )
 
 
 def _gram_keys(docs: DataFrame, n: int) -> DataFrame:
@@ -86,13 +87,9 @@ def _batch_views(
         F.col(id_col).alias("doc_id"), F.col(key_col).alias("key")
     )
     shas = d.select("doc_id", F.sha2("key", 256).alias("content_sha"))
-    sig = minhash_signatures(
-        d, "key", _cfg(mf["n"]), num_hashes=mf["num_hashes"],
-        seed=mf["seed"],
-    )
-    bands = band_keys(
-        sig, bands=mf["bands"],
-        rows_per_band=mf["num_hashes"] // mf["bands"],
+    bands = minhash_bands_mapside(
+        d, "key", raw_shingles(mf["n"]), num_hashes=mf["num_hashes"],
+        bands=mf["bands"], seed=mf["seed"],
     )
     return d, shas, bands, _gram_keys(d, mf["n"])
 
@@ -124,6 +121,7 @@ def build_snapshot_index(
         min_shared_bands=min_shared_bands,
     )
     mf = {
+        "format_version": FORMAT_VERSION,
         "n": int(n), "seed": int(seed), "rows": int(n_rows),
         "num_hashes": int(knobs["num_hashes"]),
         "bands": int(knobs["bands"]),
@@ -144,8 +142,17 @@ def build_snapshot_index(
 
 
 def load_manifest(path: str) -> dict:
+    """The index manifest; raises ValueError on an index of another band
+    format (its band keys cannot meet this library's)."""
     with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
+        mf = json.load(fh)
+    if mf.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"snapshot index {path} has format_version "
+            f"{mf.get('format_version')!r}, this library reads "
+            f"{FORMAT_VERSION}: rebuild it with build_snapshot_index"
+        )
+    return mf
 
 
 def dedup_against_snapshot_index(
@@ -161,8 +168,6 @@ def dedup_against_snapshot_index(
     sets), but the corpus side is READ, not recomputed. ``threshold`` is
     query-time; the blocking knobs are the manifest's (frozen at build).
     """
-    from .mapside import candidates_from_bands
-
     spark: SparkSession = new_docs.sparkSession
     mf = load_manifest(path)
     art = _artifacts(path)

@@ -311,6 +311,7 @@ class CurationPipeline(CheckpointedPlan):
             })
 
         if not self.is_complete("split"):
+            from ..operators import adaptive
             from ..operators.adaptive import _UNSET, resolve_blocking_knobs
 
             split_src = "lmfilter" if cfg.lm_filter else "dedup"
@@ -336,24 +337,28 @@ class CurationPipeline(CheckpointedPlan):
             keyed = docs.select("doc_id", F.col(text).alias("key"))
             bands = minhash_bands_mapside(
                 keyed, num_hashes=knobs["num_hashes"], bands=knobs["bands"],
-            ).localCheckpoint(eager=True)
+            )
             # MEASURED pair-budget gate on auto-resolved safety knobs: the
             # doc-count regimes cannot see band-key concentration (this
             # generator's corpus puts 22% of docs behind one band key at
             # ANY size — the 124k-doc post-mortem in BASELINE.md emitted
             # 421M pairs under the permissive cap and spilled 79 GB).
             # Explicit config knobs skip the gate: they are a contract.
+            gated = cfg.max_bucket_size is None and cfg.min_shared_bands is None
             knob_stats: dict = {}
-            if cfg.max_bucket_size is None and cfg.min_shared_bands is None:
-                from ..operators.adaptive import enforce_pair_budget
-
-                knobs = enforce_pair_budget(bands, knobs, stats=knob_stats)
             cands = candidates_from_bands(
                 bands, None,
                 max_bucket_size=knobs["max_bucket_size"],
                 min_shared_bands=knobs["min_shared_bands"],
                 emit_both=False,
+                pair_budget=adaptive.CANDIDATE_PAIR_BUDGET if gated else None,
+                budget_stats=knob_stats,
             )
+            if gated:
+                knobs.update(
+                    max_bucket_size=knob_stats["max_bucket_size"],
+                    min_shared_bands=knob_stats["min_shared_bands"],
+                )
             model = fit_idf_mapside(keyed, "key")
             packed = vectorize_packed_mapside(model, keyed, "key",
                                               compact=True)

@@ -38,6 +38,16 @@ def _rows(df) -> list[tuple]:
     return sorted(map(tuple, df.collect()))
 
 
+# one-row bands: the blocked route makes a pair a candidate when any of
+# 128 MinHash minima agree, so it misses a pair of Jaccard j with
+# probability (1 - j)^128 (below 1e-6 at j >= 0.1) and the comparison
+# isolates the threshold rule from LSH recall. The default knobs (32
+# bands of 2 rows) miss a j = 0.3 pair with probability 0.04, which
+# "apple inc" / "apple incorporated" (j = 0.308) hits under the seed-42
+# MinHash family.
+FULL_RECALL_BANDING = {"num_hashes": 128, "bands": 128}
+
+
 def test_routes_agree_at_a_half_milli_threshold(spark, monkeypatch):
     docs = spark.createDataFrame(
         list(enumerate(NAMES)), "doc_id long, key string"
@@ -46,7 +56,8 @@ def test_routes_agree_at_a_half_milli_threshold(spark, monkeypatch):
 
     def transform(t):
         return _rows(adaptive.tfidf_transform_topk(
-            model, docs, docs, top_n=len(NAMES), min_similarity=t
+            model, docs, docs, top_n=len(NAMES), min_similarity=t,
+            **FULL_RECALL_BANDING,
         ))
 
     m, t = _half_milli_cut(r[2] for r in transform(0.0))

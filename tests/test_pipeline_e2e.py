@@ -226,8 +226,9 @@ def test_blocking_recall_on_planted_dups(spark):
 
 
 def test_mapside_blocking_recall_matches_jvm_path(spark):
-    """The map-side numpy MinHash (bench/pipeline path) must also reach
-    full candidate recall on planted duplicates, with ≥2 shared bands."""
+    """The map-side band keys fed straight to the banded join (the ER
+    pipeline's path) must also reach full candidate recall on planted
+    duplicates, with ≥2 shared bands."""
     import pyspark.sql.functions as F
 
     from polyfuzz_spark.operators.mapside import (

@@ -129,9 +129,9 @@ def test_hot_band_salting_two_list_mode(spark):
 
 
 def test_minhash_candidates_salt_recovers_capped_bucket(spark):
-    """End-to-end through the JVM MinHash generator: a corpus of one
-    shared-content clone family larger than the cap loses all candidacy
-    under 'drop' but keeps every pair under 'salt'."""
+    """End-to-end through ``minhash_candidates`` (map-side band keys): a
+    corpus of one shared-content clone family larger than the cap loses
+    all candidacy under 'drop' but keeps every pair under 'salt'."""
     from polyfuzz_spark.operators.blocking import minhash_candidates
 
     docs = spark.createDataFrame(

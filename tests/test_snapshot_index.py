@@ -3,11 +3,15 @@ append → dedup again, pinned against the recompute-everything verb
 (``dedup.dedup_against``) — the index must change WHERE the corpus side
 comes from, never WHAT survives."""
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from polyfuzz_spark.operators.dedup import dedup_against
 from polyfuzz_spark.operators.snapshot import (
+    FORMAT_VERSION,
     append_to_snapshot_index,
     build_snapshot_index,
     dedup_against_snapshot_index,
@@ -140,3 +144,37 @@ def test_snapshot_diff_basic(spark):
     )
     out = {r.doc_id: r.status for r in snapshot_diff(old, new).collect()}
     assert out == {1: "removed", 2: "changed", 5: "added"}
+
+
+def test_all_gram_less_batch(spark, corpus, tmp_path_factory):
+    """A batch whose docs are all shorter than the shingle width emits no
+    band rows at all; the exact path still drops "hi" and the append
+    writes no bands."""
+    path = str(tmp_path_factory.mktemp("snap") / "ix")
+    build_snapshot_index(corpus, path)
+    short = _df(spark, [(13, "hi"), (14, "yo")]).repartition(1)
+    surv = dedup_against_snapshot_index(short, path)
+    assert _ids(surv) == [14]
+    bands_before = spark.read.parquet(path + "/bands").count()
+    assert append_to_snapshot_index(surv, path)["rows"] == 4 + 1
+    assert spark.read.parquet(path + "/bands").count() == bands_before
+
+
+def test_unstamped_index_is_refused(spark, corpus, batch, tmp_path_factory):
+    """An index whose manifest lacks the band-format stamp (how one built
+    with the former JVM band keys looks) would join nothing against new
+    batch bands: every reader refuses it and names the rebuild."""
+    path = str(tmp_path_factory.mktemp("snap") / "ix")
+    mf = build_snapshot_index(corpus, path)
+    assert mf["format_version"] == FORMAT_VERSION
+    assert load_manifest(path)["format_version"] == FORMAT_VERSION
+    del mf["format_version"]
+    with open(os.path.join(path, "manifest.json"), "w") as fh:
+        json.dump(mf, fh)
+    for read in (
+        lambda: load_manifest(path),
+        lambda: dedup_against_snapshot_index(batch, path),
+        lambda: append_to_snapshot_index(batch, path),
+    ):
+        with pytest.raises(ValueError, match="build_snapshot_index"):
+            read()
