@@ -8,7 +8,7 @@ labeled candidate pairs is the BASELINE.json acceptance metric.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions.milli import ratio_milli
@@ -42,9 +42,12 @@ def precision_recall_curve(
     )
 
 
-def score_distribution(pairs: DataFrame, sim_col: str = "sim") -> DataFrame:
-    """A6 — per-stage score distribution written next to each checkpoint."""
-    return pairs.agg(
+def score_distribution(sim_col: str = "sim") -> list[Column]:
+    """A6 — the per-stage score distribution written next to each
+    checkpoint, as aggregate columns: ``df.agg(*score_distribution(c))``
+    computes it over a table, and the stage checkpoint collects it during
+    its own write job through ``observe``."""
+    return [
         F.count(F.lit(1)).alias("n"),
         F.avg(sim_col).alias("mean"),
         F.min(sim_col).alias("min"),
@@ -52,7 +55,7 @@ def score_distribution(pairs: DataFrame, sim_col: str = "sim") -> DataFrame:
         F.percentile_approx(
             sim_col, F.array(*[F.lit(x) for x in (0.5, 0.9, 0.99)])
         ).alias("p50_p90_p99"),
-    )
+    ]
 
 
 def pairwise_f1(

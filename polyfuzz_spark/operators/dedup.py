@@ -3,8 +3,8 @@
 Exact (hash-groupBy), n-gram Jaccard (exact set similarity via term join),
 MinHash-LSH near-dup (banded candidates + exact verification), and SimHash.
 Gram tables, verify joins and SimHash are JVM-side; MinHash band keys come
-from the map-side kernel (``mapside.minhash_bands_mapside``, through
-``blocking.minhash_candidates``), and the small-vocabulary dense routes
+from the map-side kernel (``mapside.minhash_bands_mapside``), and the
+small-vocabulary dense routes
 score in Arrow batch kernels.
 
 Scale shape: exact dedup is one map-side-combinable groupBy on a hash key;
@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.milli import ratio_milli, ratio_to_milli, threshold_milli
 from ..functions.ngrams import char_ngrams
 from .blocking import minhash_candidates
+from .mapside import candidates_from_bands, minhash_bands_mapside
 from .tfidf import TfidfConfig
 
 
@@ -701,11 +702,17 @@ def minhash_near_dups(
     if routed is not None:
         return routed
     # large vocab: g0 arrives eagerly checkpointed, and the
-    # eligibility-checked gram table IS the verify input
-    cands = minhash_candidates(
-        docs, None, key_col, raw_shingles(n), num_hashes=num_hashes,
-        bands=bands, max_bucket_size=max_bucket_size,
-    ).where(F.col("from_id") < F.col("to_id"))
+    # eligibility-checked gram table IS the verify input. Jaccard is
+    # symmetric, so the banded self-join emits each unordered pair once
+    # (from_id < to_id).
+    cands = candidates_from_bands(
+        minhash_bands_mapside(
+            docs, key_col, raw_shingles(n), num_hashes=num_hashes,
+            bands=bands,
+        ),
+        max_bucket_size=max_bucket_size,
+        emit_both=False,
+    )
     return _verified_jaccard(cands, g0, threshold)
 
 

@@ -8,9 +8,11 @@ on falsy keys (``""``). We deliberately implement true transitive closure
 with deterministic representatives — a documented semantic upgrade mandated
 by the north rule — and verify the reference's golden clusters still hold.
 
-Algorithm: min-label propagation WITH pointer jumping, per round:
-    (hop)   label(v) ← min(label(v), min_{(u,v)∈E} label(u))
+Algorithm: min-label propagation WITH pointer jumping. Initial labels
+are one hop from self-labels, label(v) = min(v, min neighbour), from one
+groupBy over the symmetrized edges; then per round:
     (jump)  label(v) ← label(label(v))
+    (hop)   label(v) ← min(label(v), min_{(u,v)∈E} label(u))
 The hop is one groupBy(node).min (map-side combinable, so hot nodes from
 giant components partial-aggregate before the shuffle; AQE skew-join
 splitting covers the join side). The jump joins the label table onto itself
@@ -18,8 +20,10 @@ splitting covers the join side). The jump joins the label table onto itself
 remaining distance to the component minimum each round: O(log diameter)
 rounds (a 1k-node path converges in ~10 rounds, not ~1000; pinned by
 ``tests/test_grouping.py::test_connected_components_path_graph_log_rounds``).
-``localCheckpoint`` truncates lineage each round so plans don't grow with
-iteration count.
+Jump and hop run as ONE plan per round, materialized by one
+``localCheckpoint`` whose job also counts the changed labels (an
+``Observation``), so the convergence test costs no job of its own and
+plans don't grow with iteration count.
 
 Labels ARE the min string key, so the converged label doubles as the
 deterministic cluster representative (G3; divergence from the reference's
@@ -28,7 +32,7 @@ insertion-order representative is documented + tested).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -91,10 +95,12 @@ def connected_components(
     unmatched strings never enter cluster_mapping).
 
     Size-adaptive: an edge set within ``SMALL_GRAPH_MAX_EDGES`` is solved by
-    driver union-find in one pass — the iterative label loop pays ~5 Spark
-    jobs of pure scheduling overhead PER ROUND, which dwarfs the actual work
-    on match-graphs (near-dup components are tiny; the whole edge list is
-    far smaller than the corpus that produced it). Larger graphs run the
+    driver union-find in one pass — the iterative label loop pays about 9
+    executed stages of scheduling overhead PER ROUND (92 for the 10 rounds
+    of a 1,000-node path graph, raw and symmetrized edge checkpoints
+    included), which dwarfs the actual work on match-graphs (near-dup
+    components are tiny; the whole edge list is far smaller than the
+    corpus that produced it). Larger graphs run the
     distributed min-label + pointer-jumping loop below, converging in
     O(log diameter) rounds. Both tiers produce identical (key,
     representative, cluster_id) rows (pinned by
@@ -105,20 +111,23 @@ def connected_components(
     """
     spark = edges.sparkSession
     # materialize the RAW edge list once (no shuffle — checkpoint is pure
-    # materialization) and gate on its count. The symmetrize+distinct pass
-    # (two shuffles of the edge list) is only built for the distributed
-    # tier: union-find is idempotent under duplicate and reversed edges,
-    # so the driver tier collects the raw list as-is. Raw count ≥ distinct
-    # count, so the budget stays a conservative driver-memory bound.
-    raw = edges.localCheckpoint(eager=True)
-    n_edges = raw.count()
+    # materialization); its count rides the same job through observe and
+    # picks the tier. The symmetrize+distinct pass (two shuffles of the
+    # edge list) is only built for the distributed tier: union-find is
+    # idempotent under duplicate and reversed edges, so the driver tier
+    # collects the raw list as-is. Raw count ≥ distinct count, so the
+    # budget stays a conservative driver-memory bound.
+    seen = Observation("cc_edges")
+    raw = edges.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    n_edges = seen.get["n"]
+    # both tiers drop null-keyed rows
+    raw = raw.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
     if n_edges <= SMALL_GRAPH_MAX_EDGES:
         # Arrow transfer — ~10× cheaper than Row-object collect at the
-        # budget ceiling. Null-keyed rows are dropped (the previous
-        # symmetrized path filtered them implicitly via src <= dst).
-        pdf = raw.where(
-            F.col("src").isNotNull() & F.col("dst").isNotNull()
-        ).toPandas()
+        # budget ceiling
+        pdf = raw.toPandas()
         pairs = list(zip(pdf["src"], pdf["dst"]))
         if stats is not None:
             stats["iterations"] = 0
@@ -163,58 +172,57 @@ def connected_components(
         base_parts = spark.sparkContext.defaultParallelism
     cc_parts = max(8, min(base_parts, n_edges // 250_000 + 1))
 
-    labels = (
-        sym.select(F.col("src").alias("key"))
-        .distinct()
-        .withColumn("label", F.col("key"))
-        .localCheckpoint(eager=True)
-    )
-
     iterations = 0
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(cc_parts))
+        # initial labels are the first hop from self-labels, in one
+        # map-side-combinable groupBy: label(v) = min(v, min neighbour).
+        # The first round's plan computes them; nothing is materialized
+        # before it.
+        labels = sym.groupBy("src").agg(F.min("dst").alias("nmin")).select(
+            F.col("src").alias("key"), F.least("src", "nmin").alias("label")
+        )
         for _ in range(max_iterations):
             iterations += 1
-            # hop: per-node min of incoming neighbor labels, folded into the
-            # own label with least() (null-skipping) — a join + map-side-
-            # combinable groupBy, no union (Catalyst's union constraint
-            # rewrite trips over self-join lineage here)
-            incoming = (
-                sym.join(labels, sym["src"] == labels["key"])
-                .select(sym["dst"].alias("key"), F.col("label").alias("nl"))
-            )
-            neighbor_min = incoming.groupBy("key").agg(
-                F.min("nl").alias("nmin")
-            )
-            hop = (
-                labels.join(neighbor_min, "key", "left")
-                .select("key", F.least("label", "nmin").alias("label"))
-                .localCheckpoint(eager=True)
-            )
             # jump (pointer doubling): label ← label(label). Labels are
             # node keys by construction so the self-lookup lands; this
             # halves the distance to the component min every round →
-            # O(log diameter) convergence even on path graphs.
-            dim = hop.select(
+            # O(log diameter) convergence even on path graphs. The old
+            # label rides along for the convergence test.
+            dim = labels.select(
                 F.col("key").alias("d_key"), F.col("label").alias("d_label")
             )
-            new_labels = (
-                hop.join(dim, F.col("label") == F.col("d_key"), "left")
-                .select(
-                    "key",
-                    F.coalesce("d_label", "label").alias("label"),
+            jumped = labels.join(
+                dim, F.col("label") == F.col("d_key"), "left"
+            ).select(
+                "key",
+                F.col("label").alias("old"),
+                F.coalesce("d_label", "label").alias("label"),
+            )
+            # hop: per-node min of incoming neighbour labels, folded into
+            # the own label with least() (null-skipping) — a join + map-
+            # side-combinable groupBy, no union (Catalyst's union
+            # constraint rewrite trips over self-join lineage here)
+            neighbor_min = (
+                sym.join(jumped, sym["src"] == jumped["key"])
+                .groupBy(sym["dst"].alias("key"))
+                .agg(F.min("label").alias("nmin"))
+            )
+            # ONE materialization per round; the count of changed labels
+            # rides its job through observe
+            moved = Observation(f"cc_round_{iterations}")
+            labels = (
+                jumped.join(neighbor_min, "key", "left")
+                .select("key", "old", F.least("label", "nmin").alias("label"))
+                .observe(
+                    moved,
+                    F.sum((F.col("label") != F.col("old")).cast("long"))
+                    .alias("changed"),
                 )
+                .select("key", "label")
                 .localCheckpoint(eager=True)
             )
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "key")
-                .where(F.col("n.label") != F.col("o.label"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
+            if not moved.get["changed"]:
                 break
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)

@@ -126,16 +126,21 @@ def doc_freq_batch(keys: list, cfg: TfidfConfig,
 
 def fit_idf_mapside(docs: DataFrame, key_col: str = "key",
                     cfg: TfidfConfig | None = None,
-                    id_col: str = "doc_id") -> TfidfModel:
+                    id_col: str = "doc_id",
+                    n_docs: int | None = None) -> TfidfModel:
     """TfidfModel with identical IDF values, document frequency counted
     map-side: each Arrow batch emits one partial (term, df) table
     (``doc_freq_batch``) — the shuffle carries ~|vocab| rows per batch
     instead of |docs|×|grams| exploded rows, and the gram generation runs
     in the same Python kernel family as vectorization (the JVM regex-clean
     + per-gram substring allocation was the single largest stage in the
-    event log: 40 s of the 117 s pipeline at 250k docs)."""
+    event log: 40 s of the 117 s pipeline at 250k docs).
+
+    ``n_docs``: the row count of ``docs`` when the caller already holds
+    it (a checkpoint manifest's ``rows``); None counts it here."""
     cfg = cfg or TfidfConfig()
-    n_docs = docs.count()
+    if n_docs is None:
+        n_docs = docs.count()
     bc_cfg = docs.sparkSession.sparkContext.broadcast(
         (cfg, FIT_SLICE_DOCS)
     )

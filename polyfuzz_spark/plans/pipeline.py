@@ -2,7 +2,11 @@
 reference lifecycle §3.1/§3.3 re-expressed as staged Spark jobs).
 
 Stages (each writes parquet + a JSON manifest with row counts, the sha256
-content invariant, and a score distribution):
+content invariant, and a score distribution). A checkpoint is ONE Spark
+job: the write's ``observe`` carries the row count, the audit totals and
+the score distribution, per-file row counts come from the written parquet
+footers on the driver, and the stage is read back with the schema just
+written — nothing re-reads a stage to manifest it:
 
     ingest      corpus table (input_hint schema) → checkpoint
     candidates  MinHash-LSH blocking → (from_id, to_id)
@@ -37,8 +41,9 @@ import time
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..metrics import score_distribution
 from ..operators.cosine_join import score_candidates_packed
@@ -100,6 +105,8 @@ class CheckpointedPlan:
         # attributing eager pre-checkpoint work (localCheckpoint jobs,
         # knob-resolution counts) to the stage that runs it
         self._prev_stage_done: float | None = None
+        # schema of each parquet stage this plan wrote, for read()
+        self._schemas: dict[str, StructType] = {}
 
     # ------------------------------------------------------------ plumbing
     def _path(self, stage: str) -> Path:
@@ -129,35 +136,34 @@ class CheckpointedPlan:
             df.write.mode("overwrite").parquet(str(self._path(stage)))
 
     def read(self, stage: str) -> DataFrame:
+        """The stage's table. A parquet stage this plan wrote is read with
+        the schema it wrote, so the read runs no schema-inference job; a
+        stage completed by an earlier process is read with inference."""
         if self.sink_kind() == "iceberg":
             return self.spark.read.table(self._table(stage))
-        return self.spark.read.parquet(str(self._path(stage)))
+        reader = self.spark.read
+        if stage in self._schemas:
+            reader = reader.schema(self._schemas[stage])
+        return reader.parquet(str(self._path(stage)))
 
-    def _checkpoint(self, stage: str, df: DataFrame,
-                    sim_col: str | None = None,
-                    extra: dict | None = None,
-                    metrics: dict | None = None) -> DataFrame:
-        """Write the stage, then manifest it. ``metrics`` maps manifest key
-        → aggregate Column; they are collected DURING the write job via
-        ``observe`` (CollectMetrics), so a stage's audit totals cost zero
-        extra passes — at scale a post-write ``agg`` is a full re-read of
-        the column it touches, once per stage. Null aggregates (empty
-        stage) land as 0."""
-        t0 = time.monotonic()
-        obs = None
-        if metrics:
-            from pyspark.sql import Observation
+    def _file_lineage(self, stage: str) -> list[tuple[str, int]]:
+        """(file name, rows) per non-empty data file of a parquet stage,
+        from the files' footers on the driver: no Spark job. Empty files
+        are left out, as a row-count query over the files leaves them."""
+        import pyarrow.parquet as pq
 
-            obs = Observation(f"{stage}_metrics")
-            df = df.observe(
-                obs, *[c.alias(k) for k, c in metrics.items()]
-            )
-        self._write_stage(stage, df)
-        back = self.read(stage)
-        # per-partition lineage: row count per output file (parquet) or per
-        # scan partition (sinks that don't expose file names), in ONE
-        # map-side-combined job whose output is bounded by the file count —
-        # the stage total is its sum, so this replaces the plain count job.
+        files = (
+            p for p in self._path(stage).iterdir()
+            if p.suffix == ".parquet" and not p.name.startswith(("_", "."))
+        )
+        return sorted(
+            (p.name, n) for p in files if (n := pq.read_metadata(p).num_rows)
+        )
+
+    def _scan_lineage(self, back: DataFrame) -> list[tuple[str, int]]:
+        """(part, rows) per input file, or per scan partition for sinks
+        that expose no file names, in ONE map-side-combined job whose
+        output is bounded by the file count."""
         per_part = (
             back.groupBy(F.input_file_name().alias("part")).count().collect()
         )
@@ -167,13 +173,50 @@ class CheckpointedPlan:
                     F.spark_partition_id().cast("string").alias("part")
                 ).count().collect()
             )
-        lineage = sorted(
+        return sorted(
             (r["part"].rsplit("/", 1)[-1] or r["part"], int(r["count"]))
             for r in per_part
         )
+
+    def _checkpoint(self, stage: str, df: DataFrame,
+                    sim_col: str | None = None,
+                    extra: dict | None = None,
+                    metrics: dict | None = None) -> DataFrame:
+        """Write the stage, then manifest it from the write job itself: no
+        re-read. The write's ``observe`` (CollectMetrics) carries the row
+        count, the score distribution of ``sim_col`` when it is set
+        (``metrics.score_distribution``) and the caller's ``metrics``
+        (manifest key → aggregate Column, e.g. audit totals; null
+        aggregates of an empty stage land as 0). A parquet stage's
+        per-file row counts come from the written files' footers and must
+        sum to the observed count; the Iceberg sink keeps a per-file row
+        count query. The returned DataFrame reads the stage back lazily,
+        with the schema just written."""
+        t0 = time.monotonic()
+        dist = score_distribution(sim_col) if sim_col is not None else []
+        obs = Observation(f"{stage}_metrics")
+        self._write_stage(stage, df.observe(
+            obs, F.count(F.lit(1)).alias("rows"), *dist,
+            *[c.alias(k) for k, c in (metrics or {}).items()],
+        ))
+        # one row in observe order: rows, the distribution, the metrics
+        observed = list(obs.get.items())
+        rows = observed[0][1]
+        parquet = self.sink_kind() == "parquet"
+        if parquet:
+            self._schemas[stage] = df.schema
+        back = self.read(stage)
+        lineage = (
+            self._file_lineage(stage) if parquet else self._scan_lineage(back)
+        )
+        if sum(c for _, c in lineage) != rows:
+            raise RuntimeError(
+                f"stage {stage}: the written files hold "
+                f"{sum(c for _, c in lineage)} rows, the write observed {rows}"
+            )
         manifest = {
             "stage": stage,
-            "rows": sum(c for _, c in lineage),
+            "rows": rows,
             "complete": True,
             "written_at": time.time(),
             "schema": back.schema.simpleString(),
@@ -192,19 +235,18 @@ class CheckpointedPlan:
                 "rows_min": min(counts),
                 "rows_max": max(counts),
             }
-        if sim_col is not None:
-            dist = score_distribution(back, sim_col).collect()[0].asDict()
-            dist["p50_p90_p99"] = list(dist["p50_p90_p99"] or [])
-            manifest["score_distribution"] = dist
-        if obs is not None:
-            manifest.update({
-                k: (0 if v is None else v) for k, v in obs.get.items()
-            })
+        if dist:
+            d = dict(observed[1:1 + len(dist)])
+            d["p50_p90_p99"] = list(d["p50_p90_p99"] or [])
+            manifest["score_distribution"] = d
+        manifest.update({
+            k: (0 if v is None else v) for k, v in observed[1 + len(dist):]
+        })
         if extra:
             manifest.update(extra)
         # stage walls make every run self-profiling from its manifests
-        # alone: wall_s is compute + write + lineage + metric collection
-        # (the compute is lazy, so it lands inside the write job);
+        # alone: wall_s is compute + write + lineage (the compute is lazy,
+        # so it lands inside the write job);
         # pre_wall_s is the stage's EAGER pre-checkpoint work (candidate
         # localCheckpoints, knob-resolution counts) since the previous
         # stage finished
@@ -282,6 +324,7 @@ class ERPipeline(CheckpointedPlan):
         docs = self.read("ingest").select(
             "doc_id", F.col(cfg.key_col).alias("key")
         )
+        n_docs = json.loads(self._manifest("ingest").read_text())["rows"]
 
         # capture BEFORE any checkpoint/backfill mutates the manifest:
         # the ordered-pairs resume guard below must run whenever the
@@ -330,7 +373,6 @@ class ERPipeline(CheckpointedPlan):
                     "start a fresh run_dir"
                 )
         if "reduction_ratio" not in cand_mf:
-            n_docs = json.loads(self._manifest("ingest").read_text())["rows"]
             total = n_docs * (n_docs - 1) / 2
             self._amend_manifest("candidates", {
                 "reduction_ratio": round(1 - cand_mf["rows"] / total, 6)
@@ -338,7 +380,7 @@ class ERPipeline(CheckpointedPlan):
             })
 
         if not self.is_complete("scores"):
-            model = fit_idf_mapside(docs, "key", cfg.tfidf)
+            model = fit_idf_mapside(docs, "key", cfg.tfidf, n_docs=n_docs)
             # compact float32 weights: halves shuffle bytes; fine here
             # because scores feed threshold/F1 decisions, not exact oracles
             packed = vectorize_packed_mapside(model, docs, "key", compact=True)

@@ -11,6 +11,8 @@ import pytest
 from polyfuzz_spark.api import PolyFuzzSpark
 from polyfuzz_spark.operators.linkage import connected_components
 
+from .test_minhash import _stages_run
+
 
 def test_grouper_two_lists(spark, from_list, to_list):
     model = PolyFuzzSpark("TF-IDF", spark).match(from_list, to_list)
@@ -137,6 +139,36 @@ def test_connected_components_path_graph_log_rounds(spark, monkeypatch):
     assert len(out) == n
     # log2(1000) ≈ 10; allow slack for the final no-change round
     assert 0 < stats["iterations"] <= 15, stats
+
+
+# executed stages of connected_components(...).toPandas() on the
+# 1,000-node path graph with the distributed tier forced (10 rounds), as
+# measured
+PATH_GRAPH_STAGES = 92
+
+
+def test_distributed_tier_stage_budget(spark, monkeypatch):
+    """Each distributed CC round is one materialization whose job also
+    counts the changed labels; the tier choice rides the raw-edge
+    checkpoint's job."""
+    from polyfuzz_spark.operators import linkage
+
+    monkeypatch.setattr(linkage, "SMALL_GRAPH_MAX_EDGES", 0)
+    keys = [f"{i:06d}" for i in range(1000)]
+    edges = spark.createDataFrame(
+        list(zip(keys, keys[1:])), "src string, dst string"
+    )
+    sc = spark.sparkContext
+    group = "cc-distributed-stage-budget"
+    sc.setJobGroup(group, "connected_components stage budget")
+    try:
+        stats: dict = {}
+        out = connected_components(edges, stats=stats).toPandas()
+    finally:
+        sc.setJobGroup("after-cc-stage-budget", "")
+    assert set(out.representative) == {keys[0]} and len(out) == 1000
+    stages = _stages_run(sc, group)
+    assert stages <= PATH_GRAPH_STAGES, (stages, stats)
 
 
 def test_driver_and_distributed_tiers_agree(spark, monkeypatch):

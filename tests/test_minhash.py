@@ -66,6 +66,25 @@ def test_minhash_candidates_stage_budget(spark, planted, two_sided, budget):
     assert _stages_run(sc, group) <= budget
 
 
+def test_near_dups_band_unordered_pairs(spark, planted, monkeypatch):
+    """The banded near-dup route emits each unordered candidate pair once;
+    its verified pairs equal those of verifying the both-orientations
+    self-mode candidates cut to from_id < to_id."""
+    from polyfuzz_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "DENSE_MAX_VOCAB", 0)  # force banded route
+    got = dedup.minhash_near_dups(planted, "key", threshold=0.6)
+    both = minhash_candidates(
+        planted, None, "key", raw_shingles(3), num_hashes=128, bands=32,
+        max_bucket_size=20_000,
+    ).where(F.col("from_id") < F.col("to_id"))
+    want = dedup._verified_jaccard(
+        both, dedup._distinct_grams(planted, "key", 3), 0.6
+    )
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
+
+
 def test_both_sides_band_with_one_family(spark, planted):
     """Two-sided candidates are exactly the cross pairs of the self-mode
     candidate set over the union: both sides hash with the same family."""

@@ -17,6 +17,8 @@ from polyfuzz_spark.sources.corpus import (
     generate_corpus,
 )
 
+from .test_minhash import _stages_run
+
 CFG = ERConfig(min_similarity=0.6, link_min_similarity=0.6)
 
 
@@ -583,3 +585,104 @@ def test_pipeline_golden_records_stage(spark, tmp_path):
     summary2 = ERPipeline(spark, run_dir, cfg).run(corpus=None)
     assert summary2["golden"]["complete"]
     assert sorted(map(tuple, pipe.read("golden").collect())) == before
+
+
+# executed stages of one ERPipeline.run on generate_corpus(60, seed=42)
+# with the distributed CC tier forced, as measured: each checkpoint is one
+# write job, and each CC round one materialization
+PIPELINE_STAGES = 31
+
+
+@pytest.fixture(scope="module")
+def smoke_run(spark, tmp_path_factory):
+    """One ER pass on the smoke corpus with the distributed CC tier
+    forced, run under its own job group: (plan, summary, stages run)."""
+    from polyfuzz_spark.operators import linkage
+
+    corpus = generate_corpus(spark, n_entities=60, seed=42)
+    corpus = corpus.localCheckpoint(eager=True)
+    pipe = ERPipeline(spark, str(tmp_path_factory.mktemp("er_smoke")), CFG)
+    sc = spark.sparkContext
+    saved = linkage.SMALL_GRAPH_MAX_EDGES
+    linkage.SMALL_GRAPH_MAX_EDGES = 0
+    group = "er-pass-stage-budget"
+    sc.setJobGroup(group, "ERPipeline.run stage budget")
+    try:
+        summary = pipe.run(corpus)
+    finally:
+        sc.setJobGroup("after-er-pass-stage-budget", "")
+        linkage.SMALL_GRAPH_MAX_EDGES = saved
+    return pipe, summary, _stages_run(sc, group)
+
+
+def test_er_pass_stage_budget(smoke_run):
+    pipe, summary, stages = smoke_run
+    assert all(m["complete"] for m in summary.values())
+    assert summary["clusters"]["rows"] > 0
+    assert stages <= PIPELINE_STAGES, stages
+
+
+def test_footer_lineage_matches_file_count_query(spark, smoke_run):
+    """Per-file row counts read from the parquet footers equal the
+    groupBy(input_file_name()) counts over the same written stage."""
+    pipe, summary, _ = smoke_run
+    for stage in pipe.STAGES:
+        back = spark.read.parquet(str(pipe._path(stage)))
+        queried = {
+            r["f"].rsplit("/", 1)[-1]: r["count"]
+            for r in back.groupBy(F.input_file_name().alias("f"))
+            .count().collect()
+        }
+        assert summary[stage]["partition_lineage"] == queried, stage
+        assert summary[stage]["rows"] == sum(queried.values()), stage
+
+
+def test_read_back_schema_equals_inferred(spark, smoke_run):
+    """A stage read back with the schema the plan wrote has exactly the
+    schema parquet inference gives, and the manifest records it."""
+    pipe, summary, _ = smoke_run
+    for stage in pipe.STAGES:
+        inferred = spark.read.parquet(str(pipe._path(stage))).schema
+        assert pipe.read(stage).schema == inferred, stage
+        assert summary[stage]["schema"] == inferred.simpleString(), stage
+
+
+def test_observed_distribution_matches_score_distribution(spark, smoke_run):
+    """The distribution observed during the write equals
+    ``score_distribution`` over the read-back: n, min and max exactly,
+    mean to the last few ulps, percentiles within percentile_approx's
+    rank error (1/accuracy, default accuracy 10000) of the exact ones."""
+    import math
+
+    from polyfuzz_spark.metrics import score_distribution
+
+    pipe, summary, _ = smoke_run
+    eps = 1 / 10_000
+    for stage, col in (("scores", "sim"), ("matches", "similarity")):
+        got = summary[stage]["score_distribution"]
+        back = spark.read.parquet(str(pipe._path(stage)))
+        want = back.agg(*score_distribution(col)).first().asDict()
+        assert got["n"] == want["n"] == summary[stage]["rows"] > 0
+        assert got["min"] == want["min"] and got["max"] == want["max"]
+        assert math.isclose(got["mean"], want["mean"], rel_tol=1e-12)
+        sims = sorted(r[0] for r in back.select(col).collect())
+        n = len(sims)
+        for p, v in zip((0.5, 0.9, 0.99), got["p50_p90_p99"]):
+            lo = sims[max(0, math.ceil((p - eps) * n) - 1)]
+            hi = sims[min(n - 1, math.ceil((p + eps) * n) - 1)]
+            assert lo <= v <= hi, (stage, p, v, lo, hi)
+
+
+def test_empty_stage_manifest(spark, tmp_path):
+    """An empty stage manifests 0 rows, no file lineage and an empty
+    distribution, as the per-file count query gave it."""
+    pipe = ERPipeline(spark, str(tmp_path / "er"), CFG)
+    empty = spark.createDataFrame([], "from_id long, to_id long, sim double")
+    back = pipe._checkpoint("scores", empty, sim_col="sim")
+    mf = json.loads(pipe._manifest("scores").read_text())
+    assert mf["rows"] == 0 and back.count() == 0
+    assert mf["partition_lineage"] == {}
+    assert mf["score_distribution"] == {
+        "n": 0, "mean": None, "min": None, "max": None, "p50_p90_p99": [],
+    }
+    assert mf["schema"] == "struct<from_id:bigint,to_id:bigint,sim:double>"
