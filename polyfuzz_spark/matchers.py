@@ -67,6 +67,76 @@ AUTO_BLOCKING_MIN_DOCS = 100_000
 # Spark tiers).
 DRIVER_MAX_DOCS = 8_000
 
+# driver-tier switch of batch serving calls (streaming.incremental._serve):
+# a batch DataFrame of at most this many docs is scored on the driver.
+# Measured on 4 vCPUs (local[4], perfbench code documents in 4 parquet
+# files against the perfbench admission index of 200 docs × 5.4k terms,
+# admission_filter + collect, warm, median of 3), driver vs mapInPandas:
+# 144 vs 260 ms at 50 docs, 165 vs 268 ms at 500, 242 vs 312 ms at 1k,
+# 284 vs 289 ms at 1.5k, 327 vs 301 ms at 2k, 1,046 vs 587 ms at 8k: the
+# driver vectorizes on one thread, mapInPandas on every core after a
+# ~0.25 s fixed cost, so the crossover is near 1.5k docs (measured at
+# this index size only; a larger index adds matmul work per doc on both
+# tiers). The driver's dense query, score and milli rows are also capped
+# at dense_cosine.BROADCAST_MAX_BYTES.
+# Monkeypatchable in tests (0 forces mapInPandas).
+SERVE_DRIVER_MAX_DOCS = 1_000
+
+# driver-tier switch of the EditDistance facade (scorers.editdistance): an
+# unblocked scan of at most this many pairs (n_from × n_to) is scored on
+# the driver. Measured on 4 vCPUs (local[4], perfbench names, WRatio,
+# match + collect, warm, median of 3), driver vs Spark tier with the
+# from-side in 8 partitions: 0.31 vs 0.69 s at 60 × 60, 0.37 vs 0.56 s at
+# 100 × 100, 0.52 vs 0.61 s at 140 × 140, 0.91 vs 0.67 s at 200 × 200,
+# 2.0 vs 1.3 s at 300 × 300 and 19.6 vs 5.7 s at 1k × 1k (one run each):
+# the crossover is near 25k pairs, where the driver's ~19 µs per WRatio
+# pair meets the Spark tier's fixed cost plus that work on 4 cores. With
+# single-partition parquet sides the Spark tier scores on one task and is
+# no faster at any size (1.9 vs 2.1 s at 300 × 300, 19.5 vs 19.9 s at
+# 1k × 1k). The float64 score matrix is also capped at
+# dense_cosine.BROADCAST_MAX_BYTES. Monkeypatchable in tests (0 forces
+# the Spark tier).
+EDIT_DRIVER_MAX_PAIRS = 25_000
+
+
+def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
+    """``df`` as one Arrow collect when it holds at most ``max_rows`` rows,
+    else None. The ``limit(max_rows + 1)`` that bounds the driver's memory
+    is also the size gate: no separate count runs."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    return pdf if len(pdf) <= max_rows else None
+
+
+def local_top_n_pairs(spark, sim: np.ndarray, top_n: int,
+                      from_ids: np.ndarray, to_ids: np.ndarray,
+                      from_type, to_type) -> DataFrame:
+    """The pairs of a driver-tier (from × to) score matrix that can reach
+    their row's top n, as a ``(from_id, to_id, sim)`` local relation for
+    ``top_n_matches``. ``sim`` is -inf where the pair is not a candidate;
+    ``from_ids``/``to_ids`` label its rows and columns and keep their
+    Spark types ``from_type``/``to_type``.
+
+    ``top_n_matches`` ranks on sim rounded to 9 decimals, so every pair it
+    can pick lies within 1e-9 of its row's n-th largest sim; the 2e-9
+    margin keeps the ties its ``to_id`` tie-break decides, and the
+    threshold it applies first drops only pairs below the ones kept."""
+    keep = sim > -np.inf
+    if 0 < top_n < sim.shape[1]:
+        col = sim.shape[1] - top_n
+        nth = np.partition(sim, col, axis=1)[:, col]
+        keep &= sim >= nth[:, None] - 2e-9
+    r, c = np.nonzero(keep)
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "from_id": from_ids[r], "to_id": to_ids[c], "sim": sim[r, c],
+        }),
+        StructType([
+            StructField("from_id", from_type),
+            StructField("to_id", to_type),
+            StructField("sim", DoubleType()),
+        ]),
+    )
+
 
 class TFIDFMatcher(BaseSparkMatcher):
     """Char n-gram TF-IDF cosine matcher (reference ``_tfidf.py``).
@@ -199,15 +269,17 @@ class TFIDFMatcher(BaseSparkMatcher):
         budget = DRIVER_MAX_DOCS
         if self.use_blocking is None:
             budget = min(budget, AUTO_BLOCKING_MIN_DOCS)
-        sides = []
-        for df in (from_df,) if to_df is None else (from_df, to_df):
-            df = df.select("doc_id", "key")
-            pdf = df.limit(budget + 1).toPandas()
-            budget -= len(pdf)
-            if budget < 0:
-                return None
-            sides.append((df.schema, pdf))
-        (f_schema, f_pdf), (t_schema, t_pdf) = sides[0], sides[-1]
+        f_sel = from_df.select("doc_id", "key")
+        t_sel = f_sel if to_df is None else to_df.select("doc_id", "key")
+        f_pdf = collect_bounded(f_sel, budget)
+        if f_pdf is None:
+            return None
+        t_pdf = f_pdf if to_df is None else collect_bounded(
+            t_sel, budget - len(f_pdf)
+        )
+        if t_pdf is None:
+            return None
+        f_schema, t_schema = f_sel.schema, t_sel.schema
         self_match = to_df is None
         f_keys = list(f_pdf["key"])
         t_keys = list(t_pdf["key"])
@@ -237,27 +309,12 @@ class TFIDFMatcher(BaseSparkMatcher):
         sim = f_mat @ t_mat.T
         if self_match:
             np.fill_diagonal(sim, 0.0)
-        keep = sim > 0
-        if 0 < self.top_n < sim.shape[1]:
-            # hand the operator only what can reach a row's top n: it
-            # ranks on sim rounded to 9 decimals, so every pair it can
-            # pick lies within 1e-9 of the row's n-th largest sim (the
-            # margin keeps the ties its to_id tie-break decides)
-            col = sim.shape[1] - self.top_n
-            nth = np.partition(sim, col, axis=1)[:, col]
-            keep &= sim >= nth[:, None] - 2e-9
-        r, c = np.nonzero(keep)
-        pairs = spark.createDataFrame(
-            pd.DataFrame({
-                "from_id": f_pdf["doc_id"].to_numpy()[f_pos[r]],
-                "to_id": t_pdf["doc_id"].to_numpy()[t_pos[c]],
-                "sim": sim[r, c],
-            }),
-            StructType([
-                StructField("from_id", f_schema["doc_id"].dataType),
-                StructField("to_id", t_schema["doc_id"].dataType),
-                StructField("sim", DoubleType()),
-            ]),
+        sim[sim <= 0] = -np.inf  # only pairs sharing a term are scored
+        pairs = local_top_n_pairs(
+            spark, sim, self.top_n,
+            f_pdf["doc_id"].to_numpy()[f_pos],
+            t_pdf["doc_id"].to_numpy()[t_pos],
+            f_schema["doc_id"].dataType, t_schema["doc_id"].dataType,
         )
         from_local = spark.createDataFrame(f_pdf, f_schema)
         to_local = (

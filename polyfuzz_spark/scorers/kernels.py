@@ -281,8 +281,21 @@ def jaro_winkler(a: str, b: str, prefix_weight: float = 0.1,
     return j + prefix * prefix_weight * (1.0 - j)
 
 
-# registry used by matchers / queries (all 0–100 except jaro family)
-RATIO_KERNELS = {
+def levenshtein_sim(a: str, b: str) -> float:
+    """Levenshtein distance as a 0–100 similarity (100 on two empties)."""
+    if not (a or b):
+        return 100.0
+    return 100.0 * (1.0 - levenshtein(a, b) / max(len(a), len(b)))
+
+
+# the one scorer-name → kernel lookup: the pair-scoring pandas UDF and the
+# EditDistance driver tier both score through it, so both tiers run the
+# same float operations. Ratio-family kernels and the jaro family's
+# percent forms are 0–100; "jaro_winkler_unit" and "monge_elkan" are 0–1
+# (composite scores that weight the raw similarity skip the *100 → /100
+# round trip, which costs an ulp, 0.8875 → 0.8874999…, and flips milli
+# rounding at boundaries).
+PAIR_KERNELS = {
     "ratio": ratio,
     "partial_ratio": partial_ratio,
     "token_sort_ratio": token_sort_ratio,
@@ -291,4 +304,9 @@ RATIO_KERNELS = {
     "partial_token_ratio": partial_token_ratio,
     "WRatio": wratio,
     "QRatio": qratio,
+    "jaro": lambda a, b: jaro(a, b) * 100.0,
+    "jaro_winkler": lambda a, b: jaro_winkler(a, b) * 100.0,
+    "jaro_winkler_unit": jaro_winkler,
+    "monge_elkan": monge_elkan,
+    "levenshtein_sim": levenshtein_sim,
 }

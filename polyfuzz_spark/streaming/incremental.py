@@ -8,12 +8,16 @@ deliberate engine extension: at ingest scale new files arrive continuously
 and must be matched against the already-resolved corpus without refitting.
 
 Design: the fitted state (the map-side vocabulary table, IDF vector,
-L2-normalized corpus matrix) is broadcast once; each incoming Arrow batch
-is scored with one BLAS matmul entirely inside ``mapInPandas``. No
-shuffle, no stateful operator, no watermark needed — the stage is a pure
-per-batch map, so the SAME code runs on a batch DataFrame and a streaming
-DataFrame (Spark's unified batch/streaming contract), and stream output ==
-batch output row-for-row (tested).
+L2-normalized corpus matrix) is broadcast once, on an index's first
+serving call; each incoming Arrow batch is scored with one BLAS matmul
+entirely inside ``mapInPandas``. No shuffle, no stateful operator, no
+watermark needed — the stage is a pure per-batch map, so the SAME
+function scores a batch DataFrame and a streaming DataFrame (Spark's
+unified batch/streaming contract), and stream output == batch output
+row-for-row (tested). A small batch DataFrame (at most
+``matchers.SERVE_DRIVER_MAX_DOCS`` docs, and within the driver's memory
+cap) skips the Python worker round trip: it is collected once and the
+same function scores it on the driver (``_serve``).
 
 Serving keeps no kernel of its own. Queries vectorize through the map-side
 kernel (``mapside.vectorize_keys``, the one behind every packed TF-IDF
@@ -33,7 +37,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import matchers
 from ..functions.milli import threshold_milli, to_milli
+from ..operators import dense_cosine
 from ..operators.dense_cosine import fits_broadcast, scatter_rows, topk_milli
 from ..operators.mapside import vectorize_keys, vocab_table
 from ..operators.tfidf import TfidfConfig, TfidfModel
@@ -120,6 +126,40 @@ def build_index(model: TfidfModel, to_vec: DataFrame,
     return TfidfIndex(vocab, idf, to_ids, to_mat, model.config, vpack)
 
 
+def _serve(docs: DataFrame, index: TfidfIndex, id_col: str, key_col: str,
+           per_batch, schema: str) -> DataFrame:
+    """``per_batch(ix, pdf) -> pdf`` over the (id, key) rows of ``docs``.
+
+    A batch DataFrame of at most ``matchers.SERVE_DRIVER_MAX_DOCS`` rows,
+    whose dense query, score and milli rows against ``index`` fit
+    ``dense_cosine.BROADCAST_MAX_BYTES``, is collected once
+    (``matchers.collect_bounded``) and scored on the driver, its result
+    returned as a local relation: no Python worker round trip. Anything
+    else, streaming DataFrames included, runs the same function per Arrow
+    batch inside ``mapInPandas`` against the index's one broadcast, made
+    on its first serving call either way."""
+    bc = _served(index, docs.sparkSession.sparkContext)
+    docs = docs.select(
+        F.col(id_col).alias(id_col), F.col(key_col).alias(key_col)
+    )
+    row_bytes = 8 * max(len(index.idf) + 2 * len(index.to_ids), 1)
+    max_rows = min(matchers.SERVE_DRIVER_MAX_DOCS,
+                   dense_cosine.BROADCAST_MAX_BYTES // row_bytes)
+    if not docs.isStreaming and max_rows > 0:
+        pdf = matchers.collect_bounded(docs, max_rows)
+        if pdf is not None:
+            return docs.sparkSession.createDataFrame(
+                per_batch(index, pdf), schema
+            )
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ix: TfidfIndex = bc.value
+        for pdf in batches:
+            yield per_batch(ix, pdf)
+
+    return docs.mapInPandas(gen, schema=schema)
+
+
 def incremental_match(
     docs: DataFrame,
     index: TfidfIndex,
@@ -129,28 +169,22 @@ def incremental_match(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(from_id, to_id, sim_milli, rnk) for each incoming document vs the
-    fitted corpus. ``docs`` may be a batch OR streaming DataFrame — the plan
-    is a stateless mapInPandas either way."""
-    spark = docs.sparkSession
-    bc = _served(index, spark.sparkContext)
+    fitted corpus. ``docs`` may be a batch OR streaming DataFrame; both
+    score each batch of rows with the same function (``_serve``)."""
     min_milli = threshold_milli(min_similarity)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ix: TfidfIndex = bc.value
-        for pdf in batches:
-            pos, mat = _vectorize_rows(list(pdf[key_col]), ix)
-            # a zero-row index gives a (k, 0) matrix, hence no rows
-            milli = to_milli(mat @ ix.to_mat.T)
-            q, c, rnk = topk_milli(milli, ix.to_ids, top_n, min_milli)
-            yield pd.DataFrame(
-                {"from_id": pdf[id_col].to_numpy()[pos][q],
-                 "to_id": ix.to_ids[c], "sim_milli": milli[q, c],
-                 "rnk": rnk}
-            )
+    def match(ix: TfidfIndex, pdf: pd.DataFrame) -> pd.DataFrame:
+        pos, mat = _vectorize_rows(list(pdf[key_col]), ix)
+        # a zero-row index gives a (k, 0) matrix, hence no rows
+        milli = to_milli(mat @ ix.to_mat.T)
+        q, c, rnk = topk_milli(milli, ix.to_ids, top_n, min_milli)
+        return pd.DataFrame(
+            {"from_id": pdf[id_col].to_numpy()[pos][q],
+             "to_id": ix.to_ids[c], "sim_milli": milli[q, c],
+             "rnk": rnk}
+        )
 
-    return docs.select(
-        F.col(id_col).alias(id_col), F.col(key_col).alias(key_col)
-    ).mapInPandas(gen, schema=OUT_SCHEMA)
+    return _serve(docs, index, id_col, key_col, match, OUT_SCHEMA)
 
 
 def stream_match_parquet(
@@ -198,32 +232,26 @@ def admission_filter(
     re-admit what the resolved corpus already contains" gate).
 
     Stateless like ``incremental_match`` (per-row verdicts need no
-    cross-row state, so the SAME plan runs on batch and streaming
+    cross-row state, so the SAME function scores batch and streaming
     DataFrames with no watermark); documents that vectorize to nothing
     (no in-vocabulary n-grams) score 0 and are admitted."""
-    spark = docs.sparkSession
-    bc = _served(index, spark.sparkContext)
     thr_milli = threshold_milli(threshold)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ix: TfidfIndex = bc.value
-        for pdf in batches:
-            keys = list(pdf[key_col])
-            pos, mat = _vectorize_rows(keys, ix)
-            best = np.zeros(len(keys), dtype=np.int64)
-            # initial=0: a zero-row index scores every doc 0 instead of
-            # raising on a max over an empty axis; cosines of tf-idf
-            # vectors are never negative, so it changes no score
-            best[pos] = to_milli(mat @ ix.to_mat.T).max(axis=1, initial=0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "key": keys,
-                    "best_sim_milli": best,
-                    "admitted": best < thr_milli,
-                }
-            )
+    def admit(ix: TfidfIndex, pdf: pd.DataFrame) -> pd.DataFrame:
+        keys = list(pdf[key_col])
+        pos, mat = _vectorize_rows(keys, ix)
+        best = np.zeros(len(keys), dtype=np.int64)
+        # initial=0: a zero-row index scores every doc 0 instead of
+        # raising on a max over an empty axis; cosines of tf-idf
+        # vectors are never negative, so it changes no score
+        best[pos] = to_milli(mat @ ix.to_mat.T).max(axis=1, initial=0)
+        return pd.DataFrame(
+            {
+                "doc_id": pdf[id_col].to_numpy(),
+                "key": keys,
+                "best_sim_milli": best,
+                "admitted": best < thr_milli,
+            }
+        )
 
-    return docs.select(
-        F.col(id_col).alias(id_col), F.col(key_col).alias(key_col)
-    ).mapInPandas(gen, schema=ADMIT_SCHEMA)
+    return _serve(docs, index, id_col, key_col, admit, ADMIT_SCHEMA)

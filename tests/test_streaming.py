@@ -725,3 +725,106 @@ def test_serving_broadcasts_each_index_once(spark, fitted, monkeypatch):
     back = pickle.loads(pickle.dumps(index))
     assert back._bc is None
     assert len(pickle.dumps(index)) == len(pickle.dumps(copy))
+
+
+def _serve_with_bound(monkeypatch, bound, call, docs):
+    """(schema, frame, ran mapInPandas) of ``call(docs)`` collected with
+    ``matchers.SERVE_DRIVER_MAX_DOCS = bound``."""
+    import polyfuzz_spark.matchers as M
+
+    monkeypatch.setattr(M, "SERVE_DRIVER_MAX_DOCS", bound)
+    mapped = []
+    real = type(docs).mapInPandas
+
+    def spy(self, *a, **k):
+        mapped.append(1)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(type(docs), "mapInPandas", spy)
+    out = call(docs)
+    return out.schema, out.toPandas(), bool(mapped)
+
+
+def _serving_call(api, index):
+    """(call(docs), sort order of its frame) of a serving API."""
+    from polyfuzz_spark.streaming.incremental import admission_filter
+
+    if api == "admission_filter":
+        return lambda docs: admission_filter(docs, index, threshold=0.5), [
+            "doc_id"
+        ]
+    return lambda docs: incremental_match(
+        docs, index, top_n=2, min_similarity=0.2
+    ), ["from_id", "rnk"]
+
+
+@pytest.mark.parametrize("api", ["admission_filter", "incremental_match"])
+def test_serving_tiers_agree(spark, fitted, monkeypatch, api):
+    """A batch call within ``matchers.SERVE_DRIVER_MAX_DOCS`` scores on the
+    driver and must give the frame ``mapInPandas`` gives (bound 0), schema
+    and dtypes included; a bound one below the batch also falls back."""
+    _, _, index = fitted
+    call, order = _serving_call(api, index)
+    docs = lists_to_df(spark, NEW_DOCS)
+    frames = []
+    for bound, mapped in ((len(NEW_DOCS), False), (0, True),
+                          (len(NEW_DOCS) - 1, True)):
+        schema, pdf, ran = _serve_with_bound(monkeypatch, bound, call, docs)
+        assert ran == mapped, bound
+        frames.append(
+            (schema, pdf.sort_values(order).reset_index(drop=True))
+        )
+    (d_schema, d) = frames[0]
+    assert len(d) > 0
+    for schema, pdf in frames[1:]:
+        assert schema == d_schema
+        pd.testing.assert_frame_equal(pdf, d, check_exact=True)
+
+
+@pytest.mark.parametrize("api", ["admission_filter", "incremental_match"])
+def test_serving_driver_tier_respects_memory_cap(spark, fitted, monkeypatch,
+                                                 api):
+    """The driver holds a dense query, score and milli row per doc, 8 bytes
+    per index term and 2 × 8 per indexed doc: a batch whose rows exceed
+    ``dense_cosine.BROADCAST_MAX_BYTES`` goes to ``mapInPandas`` under any
+    row bound, with the same frame."""
+    import polyfuzz_spark.operators.dense_cosine as DC
+
+    _, _, index = fitted
+    call, order = _serving_call(api, index)
+    docs = lists_to_df(spark, NEW_DOCS)
+    row_bytes = 8 * (len(index.idf) + 2 * len(index.to_ids))
+    frames = []
+    for n_rows, mapped in ((len(NEW_DOCS), False),
+                           (len(NEW_DOCS) - 1, True), (0, True)):
+        monkeypatch.setattr(DC, "BROADCAST_MAX_BYTES", n_rows * row_bytes)
+        _, pdf, ran = _serve_with_bound(monkeypatch, 10**6, call, docs)
+        assert ran == mapped, n_rows
+        frames.append(pdf.sort_values(order).reset_index(drop=True))
+    for pdf in frames[1:]:
+        pd.testing.assert_frame_equal(pdf, frames[0], check_exact=True)
+
+
+# executed stages of admission_filter + collect on NEW_DOCS, measured on
+# the driver tier: 2 for the bounded collect (a limit per partition, then
+# one partition) and 1 for the result's collect. The mapInPandas tier
+# runs 1, a Python-worker stage that costs more than the three.
+ADMIT_STAGES = 3
+
+
+def test_admission_filter_stage_budget(spark, fitted):
+    from polyfuzz_spark.streaming.incremental import admission_filter
+
+    from .test_minhash import _stages_run
+
+    _, _, index = fitted
+    docs = lists_to_df(spark, NEW_DOCS)
+    sc = spark.sparkContext
+    group = "admission-filter-stage-budget"
+    sc.setJobGroup(group, "admission_filter stage budget")
+    try:
+        out = admission_filter(docs, index, threshold=0.5).toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(out) == len(NEW_DOCS)
+    assert _stages_run(sc, group) <= ADMIT_STAGES
