@@ -22,9 +22,12 @@ from .matchers import BaseSparkMatcher, EmbeddingMatcher, TFIDFMatcher
 def lists_to_df(spark: SparkSession, strings: Iterable[str],
                 n_partitions: int | None = None) -> DataFrame:
     """(doc_id, key) with doc_id = list position (parity joins are by id,
-    never by row order — Spark has no row order)."""
-    rows = [(i, s) for i, s in enumerate(strings)]
-    df = spark.createDataFrame(rows, "doc_id long, key string")
+    never by row order — Spark has no row order). Built from a pandas
+    frame through Arrow, which scans faster than a frame of Python row
+    tuples."""
+    pdf = pd.DataFrame({"key": pd.Series(list(strings), dtype="object")})
+    df = spark.createDataFrame(pdf.rename_axis("doc_id").reset_index(),
+                               "doc_id long, key string")
     return df.repartition(n_partitions) if n_partitions else df
 
 
@@ -490,10 +493,7 @@ class PolyFuzzSpark:
             inst._fit_to = to_df
             for matcher in inst._matchers.values():
                 if isinstance(matcher, TFIDFMatcher) and matcher.model is not None:
-                    from .operators.tfidf import vectorize
-
                     matcher._to_df = to_df
-                    matcher.to_vec = vectorize(matcher.model, to_df, "key")
         return inst
 
     # ------------------------------------------------------------ helpers

@@ -15,12 +15,15 @@ single list → self-matches excluded; two identical lists → self-matches kept
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from .operators import dense_cosine
 from .operators.cosine_join import score_candidates_packed, sparse_cosine_pairs
 from .operators.topk import attach_to_keys, top_n_matches
 from .operators.tfidf import TfidfConfig, TfidfModel, fit_tfidf, vectorize
@@ -55,7 +58,8 @@ def _tagged(df: DataFrame, tag: str) -> DataFrame:
 AUTO_BLOCKING_MIN_DOCS = 100_000
 
 # driver-tier switch: a fit-and-match whose two sides together hold at
-# most this many docs is scored on the driver (TFIDFMatcher._match_driver).
+# most this many docs is scored on the driver (facade_tier's max_docs for
+# TFIDFMatcher).
 # Measured on 4 vCPUs (local[4], 4g driver, perfbench company names, top 3,
 # warm, median of 3), driver vs Spark tier: 1.0 vs 2.6 s at 1k + 1k docs,
 # 2.4 vs 4.6 s at 3k + 3k, 6.5 vs 9.1 s at 4.5k + 4.5k; no crossover
@@ -102,55 +106,114 @@ EDIT_DRIVER_MAX_PAIRS = 25_000
 def collect_bounded(df: DataFrame, max_rows: int) -> pd.DataFrame | None:
     """``df`` as one Arrow collect when it holds at most ``max_rows`` rows,
     else None. The ``limit(max_rows + 1)`` that bounds the driver's memory
-    is also the size gate: no separate count runs."""
+    is also the size gate: no separate count runs. A bound below 1
+    collects nothing (no job) and returns None."""
+    if max_rows < 1:
+        return None
     pdf = df.limit(max_rows + 1).toPandas()
     return pdf if len(pdf) <= max_rows else None
 
 
-def local_top_n_pairs(spark, sim: np.ndarray, top_n: int,
-                      from_ids: np.ndarray, to_ids: np.ndarray,
-                      from_type, to_type) -> DataFrame:
-    """The pairs of a driver-tier (from × to) score matrix that can reach
-    their row's top n, as a ``(from_id, to_id, sim)`` local relation for
-    ``top_n_matches``. ``sim`` is -inf where the pair is not a candidate;
-    ``from_ids``/``to_ids`` label its rows and columns and keep their
-    Spark types ``from_type``/``to_type``.
+def facade_tier(from_df: DataFrame, to_df: DataFrame | None,
+                use_blocking: bool | None, max_pairs: int,
+                max_docs: float = math.inf
+                ) -> tuple[str, pd.DataFrame | None, pd.DataFrame | None]:
+    """``(tier, f_pdf, t_pdf)`` of a facade match (``to_df`` None: a
+    self-match), from the input sizes and ``use_blocking`` alone: "driver"
+    with both sides' (doc_id, key) rows, else "exact" or "blocked".
+
+    The gate collects each side at most once (``collect_bounded``): the
+    from-side up to ``min(max_docs, max_pairs)`` rows (a self-match: the
+    square root of ``max_pairs``), the to-side up to ``min(max_docs -
+    n_from, max_pairs // n_from)``. ``use_blocking=None`` blocks above
+    ``AUTO_BLOCKING_MIN_DOCS`` total docs, so it caps ``max_docs`` there
+    too, and counts only the sides the gate did not collect whole."""
+    if use_blocking is True:
+        return "blocked", None, None
+    if use_blocking is None:
+        max_docs = min(max_docs, AUTO_BLOCKING_MIN_DOCS)
+    self_match = to_df is None
+    f_pdf = collect_bounded(
+        from_df.select("doc_id", "key"),
+        min(max_docs, math.isqrt(max_pairs) if self_match else max_pairs),
+    )
+    if f_pdf is not None:
+        n_from = len(f_pdf)
+        t_pdf = f_pdf if self_match else collect_bounded(
+            to_df.select("doc_id", "key"),
+            min(max_docs - n_from, max_pairs // max(n_from, 1)),
+        )
+        if t_pdf is not None:
+            return "driver", f_pdf, t_pdf
+    if use_blocking is None:
+        n_total = (from_df.count() if f_pdf is None else len(f_pdf)) + (
+            0 if self_match else to_df.count()
+        )
+        use_blocking = n_total > AUTO_BLOCKING_MIN_DOCS
+    return ("blocked" if use_blocking else "exact"), None, None
+
+
+def driver_pairs(from_df: DataFrame, to_df: DataFrame | None,
+                 f_pdf: pd.DataFrame, t_pdf: pd.DataFrame, sim: np.ndarray,
+                 top_n: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(pairs(from_id, to_id, sim), from_local, to_local)`` of a
+    driver-tier match: ``sim`` scores the sides ``facade_tier`` collected
+    (n_from × n_to), -inf for a non-candidate. A self-match drops the
+    pairs of one id (the Spark tiers' ``from_id != to_id``); only the
+    pairs that can reach their row's top n go on, as local relations with
+    the ids' own Spark types.
 
     ``top_n_matches`` ranks on sim rounded to 9 decimals, so every pair it
     can pick lies within 1e-9 of its row's n-th largest sim; the 2e-9
     margin keeps the ties its ``to_id`` tie-break decides, and the
     threshold it applies first drops only pairs below the ones kept."""
+    spark = from_df.sparkSession
+    f_schema = from_df.select("doc_id", "key").schema
+    t_schema = (
+        f_schema if to_df is None else to_df.select("doc_id", "key").schema
+    )
+    f_ids = f_pdf["doc_id"].to_numpy()
+    t_ids = t_pdf["doc_id"].to_numpy()
+    if to_df is None:
+        # factorized reprs: struct ids collect as dicts, which do not
+        # hash, and an object == per pair took 0.5 s at 3k × 3k
+        codes = pd.factorize(pd.Series([repr(i) for i in f_ids]))[0]
+        sim[codes[:, None] == codes[None, :]] = -np.inf
     keep = sim > -np.inf
     if 0 < top_n < sim.shape[1]:
         col = sim.shape[1] - top_n
         nth = np.partition(sim, col, axis=1)[:, col]
         keep &= sim >= nth[:, None] - 2e-9
     r, c = np.nonzero(keep)
-    return spark.createDataFrame(
+    pairs = spark.createDataFrame(
         pd.DataFrame({
-            "from_id": from_ids[r], "to_id": to_ids[c], "sim": sim[r, c],
+            "from_id": f_ids[r], "to_id": t_ids[c], "sim": sim[r, c],
         }),
         StructType([
-            StructField("from_id", from_type),
-            StructField("to_id", to_type),
+            StructField("from_id", f_schema["doc_id"].dataType),
+            StructField("to_id", t_schema["doc_id"].dataType),
             StructField("sim", DoubleType()),
         ]),
     )
+    from_local = spark.createDataFrame(f_pdf, f_schema)
+    to_local = (
+        from_local if to_df is None else spark.createDataFrame(t_pdf, t_schema)
+    )
+    return pairs, from_local, to_local
 
 
 class TFIDFMatcher(BaseSparkMatcher):
     """Char n-gram TF-IDF cosine matcher (reference ``_tfidf.py``).
 
-    Three tiers produce the scored pairs; ranking, the threshold, the
-    3-decimal rounding and the sub-0.001 nulling are one operator for all
-    of them (``top_n_matches``):
+    Three tiers produce the scored pairs, chosen by ``facade_tier``;
+    ranking, the threshold, the 3-decimal rounding and the sub-0.001
+    nulling are one operator for all of them (``top_n_matches``):
 
-    * **driver** — a fit-and-match (``re_train=True``) that would take
-      the term join, whose two sides together hold at most
-      ``DRIVER_MAX_DOCS`` docs, and whose dense score matrix plus vectors
-      fit ``dense_cosine.BROADCAST_MAX_BYTES``: one bounded Arrow collect
-      per side, then the fit, the vectors and the cosines in numpy
-      (``_match_driver``), identical rows to the term join.
+    * **driver** — a fit-and-match (``re_train=True``) whose two sides
+      together hold at most ``DRIVER_MAX_DOCS`` docs, and whose dense
+      score matrix plus vectors fit ``dense_cosine.BROADCAST_MAX_BYTES``:
+      the fit, the vectors and the cosines in numpy over the collected
+      sides (``_driver_scores``), identical rows to the term join.
     * **blocked** — ``use_blocking=True``, or ``None`` (default) above
       ``AUTO_BLOCKING_MIN_DOCS`` total docs: banded MinHash candidates,
       scored exactly over packed map-side vectors of the fitted model, so
@@ -181,7 +244,6 @@ class TFIDFMatcher(BaseSparkMatcher):
         self.use_blocking = use_blocking
         self.blocking_conf = blocking_conf or {}
         self.model: TfidfModel | None = None
-        self.to_vec: DataFrame | None = None
         self._to_df: DataFrame | None = None
 
     # -- fit/transform split (reference _tfidf.py:102-118, re_train flag) --
@@ -195,22 +257,33 @@ class TFIDFMatcher(BaseSparkMatcher):
     def match_df(self, from_df: DataFrame, to_df: DataFrame | None = None,
                  re_train: bool = True) -> DataFrame:
         exclude_self = to_df is None
-        if re_train and self.use_blocking is not True:
-            matches = self._match_driver(from_df, to_df)
-            if matches is not None:
-                return matches
+        if re_train:
+            tier, f_pdf, t_pdf = facade_tier(
+                from_df, to_df, self.use_blocking,
+                dense_cosine.BROADCAST_MAX_BYTES // 8, DRIVER_MAX_DOCS,
+            )
+            if tier == "driver":
+                sim = self._driver_scores(from_df.sparkSession, f_pdf, t_pdf,
+                                          exclude_self)
+                if sim is not None:
+                    pairs, from_local, self._to_df = driver_pairs(
+                        from_df, to_df, f_pdf, t_pdf, sim, self.top_n
+                    )
+                    matches = top_n_matches(
+                        pairs, from_local, self.top_n, self.min_similarity
+                    )
+                    return attach_to_keys(matches, self._to_df)
+                tier = "exact"  # within the gate, so not size-blocked
         if re_train or self.model is None:
             self._fit(from_df, to_df)
             self._to_df = to_df if to_df is not None else from_df
-            self.to_vec = vectorize(self.model, self._to_df, "key")
         to_df_eff = self._to_df
-        use_blocking = self.use_blocking
-        if use_blocking is None:  # size-adaptive
-            n_total = from_df.count() + (
-                0 if exclude_self else to_df_eff.count()
-            )
-            use_blocking = n_total > AUTO_BLOCKING_MIN_DOCS
-        if use_blocking:
+        if not re_train:  # a transform has no driver tier
+            tier = facade_tier(
+                from_df, None if exclude_self else to_df_eff,
+                self.use_blocking, 0,
+            )[0]
+        if tier == "blocked":
             from .operators.blocking import minhash_candidates
             from .operators.mapside import vectorize_packed_mapside
 
@@ -229,32 +302,26 @@ class TFIDFMatcher(BaseSparkMatcher):
             if exclude_self:
                 pairs = pairs.where(F.col("from_id") != F.col("to_id"))
         else:
+            to_vec = vectorize(self.model, to_df_eff, "key")
             from_vec = (
-                self.to_vec if (exclude_self and re_train)
+                to_vec if (exclude_self and re_train)
                 else vectorize(self.model, from_df, "key")
             )
             pairs = sparse_cosine_pairs(
-                from_vec, self.to_vec, exclude_self=exclude_self
+                from_vec, to_vec, exclude_self=exclude_self
             )
         matches = top_n_matches(pairs, from_df, self.top_n, self.min_similarity)
         return attach_to_keys(matches, to_df_eff)
 
-    def _match_driver(self, from_df: DataFrame,
-                      to_df: DataFrame | None) -> DataFrame | None:
-        """The driver tier of a fit-and-match, or None when the inputs do
-        not fit it (the caller then runs a Spark tier).
-
-        Each side is collected once through Arrow under ``limit(bound +
-        1)``, which is also the size gate. The fit, the vocabulary and the
-        vectors are the map-side kernels' own (``doc_freq_batch``,
-        ``vocab_from_idf``, ``vectorize_keys``); the IDF of each distinct
-        document frequency is evaluated by the JVM's ``StrictMath.log``,
-        the function behind Spark's ``log``, so it is bit-identical to
-        ``fit_tfidf``. The cosines are one dense matmul; the ``sim > 0``
-        pairs (diagonal excluded for a self-match) that can reach their
-        row's top n go to the same ``top_n_matches`` + ``attach_to_keys``
-        as the Spark tiers, over local relations of the collected sides."""
-        from .operators.dense_cosine import BROADCAST_MAX_BYTES, scatter_rows
+    def _driver_scores(self, spark, f_pdf: pd.DataFrame, t_pdf: pd.DataFrame,
+                       self_match: bool) -> np.ndarray | None:
+        """The driver tier's cosine matrix, -inf where a pair shares no
+        term, or None when it and the vectors would not fit
+        ``dense_cosine.BROADCAST_MAX_BYTES``. The fit, vocabulary and
+        vectors are the map-side kernels' own; each IDF is evaluated by the
+        JVM's ``StrictMath.log`` (Spark's ``log``), so the model it leaves
+        for a later transform, save or group is ``fit_tfidf``'s, bit for
+        bit."""
         from .operators.mapside import (
             FIT_SLICE_DOCS,
             VECTORIZER_SLICE_DOCS,
@@ -263,30 +330,13 @@ class TFIDFMatcher(BaseSparkMatcher):
             vocab_from_idf,
         )
 
-        spark = from_df.sparkSession
-        # the tier stands in for the term join only: inputs the
-        # size-adaptive switch would block stay on the blocked tier
-        budget = DRIVER_MAX_DOCS
-        if self.use_blocking is None:
-            budget = min(budget, AUTO_BLOCKING_MIN_DOCS)
-        f_sel = from_df.select("doc_id", "key")
-        t_sel = f_sel if to_df is None else to_df.select("doc_id", "key")
-        f_pdf = collect_bounded(f_sel, budget)
-        if f_pdf is None:
-            return None
-        t_pdf = f_pdf if to_df is None else collect_bounded(
-            t_sel, budget - len(f_pdf)
-        )
-        if t_pdf is None:
-            return None
-        f_schema, t_schema = f_sel.schema, t_sel.schema
-        self_match = to_df is None
         f_keys = list(f_pdf["key"])
         t_keys = list(t_pdf["key"])
         fit_keys = f_keys if self_match else t_keys + f_keys
         dfs = doc_freq_batch(fit_keys, self.cfg, FIT_SLICE_DOCS)
         n_f, n_t, dim = len(f_keys), len(t_keys), len(dfs)
-        if (n_f * n_t + (n_f + n_t) * dim) * 8 > BROADCAST_MAX_BYTES:
+        held = (n_f * n_t + (n_f + n_t) * dim) * 8
+        if held > dense_cosine.BROADCAST_MAX_BYTES:
             return None
         n1 = 1.0 + float(len(fit_keys))
         log = spark.sparkContext._jvm.java.lang.StrictMath.log
@@ -298,30 +348,17 @@ class TFIDFMatcher(BaseSparkMatcher):
         idfs = [idf_of[d] for d in dfs["pdf_"].tolist()]
         vocab, vpack = vocab_from_idf(terms, idfs, self.cfg)
 
-        def vectors(keys):
-            kept, ts, ws = vectorize_keys(
+        def vectors(keys):  # a zero row for a key with no known gram
+            mat = np.zeros((len(keys), dim))
+            for i, t, w in zip(*vectorize_keys(
                 keys, vocab, vpack, self.cfg, VECTORIZER_SLICE_DOCS
-            )
-            return np.asarray(kept, dtype=np.int64), scatter_rows(ts, ws, dim)
+            )):
+                mat[i, t] = w
+            return mat
 
-        f_pos, f_mat = vectors(f_keys)
-        t_pos, t_mat = (f_pos, f_mat) if self_match else vectors(t_keys)
-        sim = f_mat @ t_mat.T
-        if self_match:
-            np.fill_diagonal(sim, 0.0)
+        f_mat = vectors(f_keys)
+        sim = f_mat @ (f_mat if self_match else vectors(t_keys)).T
         sim[sim <= 0] = -np.inf  # only pairs sharing a term are scored
-        pairs = local_top_n_pairs(
-            spark, sim, self.top_n,
-            f_pdf["doc_id"].to_numpy()[f_pos],
-            t_pdf["doc_id"].to_numpy()[t_pos],
-            f_schema["doc_id"].dataType, t_schema["doc_id"].dataType,
-        )
-        from_local = spark.createDataFrame(f_pdf, f_schema)
-        to_local = (
-            from_local if self_match else spark.createDataFrame(t_pdf, t_schema)
-        )
-        # fitted state, as a Spark-tier fit leaves it: a later transform,
-        # save or group reads the same model
         self.model = TfidfModel(
             idf=spark.createDataFrame(
                 pd.DataFrame({
@@ -333,12 +370,7 @@ class TFIDFMatcher(BaseSparkMatcher):
             n_docs=len(fit_keys),
             config=self.cfg,
         )
-        self._to_df = to_local
-        self.to_vec = vectorize(self.model, to_local, "key")
-        matches = top_n_matches(
-            pairs, from_local, self.top_n, self.min_similarity
-        )
-        return attach_to_keys(matches, to_local)
+        return sim
 
 
 class EmbeddingMatcher(BaseSparkMatcher):

@@ -10,9 +10,9 @@ scoring has two tiers, and ranking is the same Spark operators for both
 (``top_n_matches`` or the argmax window, then ``attach_to_keys``):
 
 * **driver** — an unblocked scan of at most
-  ``matchers.EDIT_DRIVER_MAX_PAIRS`` pairs (n_from × n_to): one bounded
-  Arrow collect per side, every pair scored on the driver, and the pairs
-  that can reach their row's top n handed on as local relations.
+  ``matchers.EDIT_DRIVER_MAX_PAIRS`` pairs (n_from × n_to): the facade
+  tier rule's one bounded Arrow collect per side, every pair scored on
+  the driver, and its driver tail (``matchers.driver_pairs``).
 * **Spark** — everything else: a candidate join + one vectorized pandas
   UDF over Arrow batches of pairs, so the Python boundary is crossed once
   per batch, not per row. At scale, candidates come from blocking (same
@@ -29,14 +29,13 @@ like the reference's EditDistance does (``_distance.py:93-96``).
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .. import matchers
 from ..matchers import BaseSparkMatcher
 from ..operators.topk import attach_to_keys, top_n_matches
 
@@ -86,43 +85,42 @@ def _scored_pairs(
     sim = scorer(from_key, to_key) / scale; a self-match (``to_df`` None)
     scores only from_id != to_id.
 
-    The driver tier (``_driver_pairs``) serves an unblocked scan that fits
-    it (``_collect_sides``) and hands on only the pairs that can reach
-    their row's top ``top_n``; the Spark tier scores every candidate pair.
-    ``use_blocking=None`` = size-adaptive, same rule as TFIDFMatcher: the
-    full crossJoin scan is quadratic, so above
-    ``matchers.AUTO_BLOCKING_MIN_DOCS`` total docs candidates come from
-    banded MinHash blocking instead (the reference's extractOne scans every
-    to-string; at corpus scale that is the blocked candidate set)."""
-    exclude_self = to_df is None
-    n_from = None  # the from-side's size, when the gate collected it whole
-    if use_blocking is not True:
-        f_pdf, t_pdf = _collect_sides(from_df, to_df, use_blocking)
-        if t_pdf is not None:
-            return _driver_pairs(from_df, to_df, f_pdf, t_pdf, scorer,
-                                 scale, top_n)
-        if f_pdf is not None:
-            n_from = len(f_pdf)
+    ``matchers.facade_tier`` picks the tier, as for TFIDFMatcher: the
+    crossJoin is quadratic, so a size-adaptive scan over
+    ``matchers.AUTO_BLOCKING_MIN_DOCS`` docs takes MinHash candidates (the
+    reference's extractOne scans every to-string). The driver tier scores
+    every pair with the UDF's kernel and null-key rule and keeps zero
+    scores, which fill a row's ranks as NULL matches on both tiers."""
+    from ..operators.dense_cosine import BROADCAST_MAX_BYTES
+
+    # the float64 score matrix is what the driver tier holds
+    tier, f_pdf, t_pdf = matchers.facade_tier(
+        from_df, to_df, use_blocking,
+        min(matchers.EDIT_DRIVER_MAX_PAIRS, BROADCAST_MAX_BYTES // 8),
+    )
+    if tier == "driver":
+        from .kernels import PAIR_KERNELS
+
+        fn = PAIR_KERNELS[scorer]
+        f_keys = f_pdf["key"].fillna("").tolist()
+        t_keys = t_pdf["key"].fillna("").tolist()
+        sim = np.array(
+            [fn(x, y) for x in f_keys for y in t_keys], dtype=np.float64
+        ).reshape(len(f_keys), len(t_keys)) / scale
+        return matchers.driver_pairs(from_df, to_df, f_pdf, t_pdf, sim, top_n)
     to_eff = to_df if to_df is not None else from_df
     f = from_df.select(
         F.col("doc_id").alias("from_id"), F.col("key").alias("f_key")
     )
     t = to_eff.select(F.col("doc_id").alias("to_id"), F.col("key").alias("t_key"))
-    if use_blocking is None:
-        from ..matchers import AUTO_BLOCKING_MIN_DOCS
-
-        n_total = (from_df.count() if n_from is None else n_from) + (
-            0 if exclude_self else to_eff.count()
-        )
-        use_blocking = n_total > AUTO_BLOCKING_MIN_DOCS
-    if use_blocking:
+    if tier == "blocked":
         from ..operators.blocking import minhash_candidates
 
         cand = minhash_candidates(from_df, to_df, **(blocking_conf or {}))
         pairs = cand.join(f, "from_id").join(t, "to_id")
     else:
         pairs = f.crossJoin(t)
-    if exclude_self:
+    if to_df is None:
         pairs = pairs.where(F.col("from_id") != F.col("to_id"))
     raw = pair_scorer_udf(scorer)(F.col("f_key"), F.col("t_key"))
     return (
@@ -130,82 +128,6 @@ def _scored_pairs(
         from_df,
         to_eff,
     )
-
-
-def _collect_sides(
-    from_df: DataFrame, to_df: DataFrame | None, use_blocking: bool | None,
-) -> tuple[pd.DataFrame | None, pd.DataFrame | None]:
-    """The (from, to) (doc_id, key) rows of a scan that fits the driver
-    tier, else (from rows or None, None): the gate of ``_driver_pairs``.
-
-    Each side is collected at most once under ``matchers.collect_bounded``,
-    whose row limit is also the size gate: the from-side up to the pair
-    bound, the to-side up to the bound divided by the from-side's size (a
-    self-match: its one side up to the bound's square root). No count
-    runs. A from-side collected whole stands in for the size-adaptive
-    switch's count of it, so a size-adaptive scan over the bound runs one
-    job more than the Spark tier alone."""
-    from ..matchers import (
-        AUTO_BLOCKING_MIN_DOCS,
-        EDIT_DRIVER_MAX_PAIRS,
-        collect_bounded,
-    )
-    from ..operators.dense_cosine import BROADCAST_MAX_BYTES
-
-    # the float64 score matrix is what the tier holds on the driver
-    max_pairs = min(EDIT_DRIVER_MAX_PAIRS, BROADCAST_MAX_BYTES // 8)
-    # the tier stands in for the crossJoin only: inputs the size-adaptive
-    # switch would block stay on the blocked tier
-    max_docs = AUTO_BLOCKING_MIN_DOCS if use_blocking is None else max_pairs
-    f_sel = from_df.select("doc_id", "key")
-    if to_df is None:
-        f_pdf = collect_bounded(f_sel, min(math.isqrt(max_pairs), max_docs))
-        return f_pdf, f_pdf
-    f_pdf = collect_bounded(f_sel, min(max_pairs, max_docs))
-    if f_pdf is None:
-        return None, None
-    return f_pdf, collect_bounded(
-        to_df.select("doc_id", "key"),
-        min(max_pairs // max(len(f_pdf), 1), max_docs - len(f_pdf)),
-    )
-
-
-def _driver_pairs(
-    from_df: DataFrame, to_df: DataFrame | None, f_pdf: pd.DataFrame,
-    t_pdf: pd.DataFrame, scorer: str, scale: float, top_n: int,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The driver tier of ``_scored_pairs`` over the sides' collected rows
-    (``_collect_sides``). Every pair is scored with the UDF's own kernel
-    and the UDF's null-key rule, and zero scores are kept: the Spark tier
-    ranks every pair, so a row with fewer than n positive scores still
-    fills its ranks (``top_n_matches`` reports the sub-0.001 ones as NULL
-    matches)."""
-    from ..matchers import local_top_n_pairs
-    from .kernels import PAIR_KERNELS
-
-    self_match = to_df is None
-    f_sel = from_df.select("doc_id", "key")
-    t_sel = f_sel if self_match else to_df.select("doc_id", "key")
-    fn = PAIR_KERNELS[scorer]
-    f_keys = f_pdf["key"].fillna("").tolist()
-    t_keys = t_pdf["key"].fillna("").tolist()
-    sim = np.array(
-        [fn(x, y) for x in f_keys for y in t_keys], dtype=np.float64
-    ).reshape(len(f_keys), len(t_keys)) / scale
-    f_ids = f_pdf["doc_id"].to_numpy()
-    t_ids = t_pdf["doc_id"].to_numpy()
-    if self_match:
-        sim[f_ids[:, None] == t_ids[None, :]] = -np.inf
-    spark = from_df.sparkSession
-    pairs = local_top_n_pairs(
-        spark, sim, top_n, f_ids, t_ids,
-        f_sel.schema["doc_id"].dataType, t_sel.schema["doc_id"].dataType,
-    )
-    from_local = spark.createDataFrame(f_pdf, f_sel.schema)
-    to_local = (
-        from_local if self_match else spark.createDataFrame(t_pdf, t_sel.schema)
-    )
-    return pairs, from_local, to_local
 
 
 class RapidFuzzMatcher(BaseSparkMatcher):

@@ -9,15 +9,16 @@ and must be matched against the already-resolved corpus without refitting.
 
 Design: the fitted state (the map-side vocabulary table, IDF vector,
 L2-normalized corpus matrix) is broadcast once, on an index's first
-serving call; each incoming Arrow batch is scored with one BLAS matmul
-entirely inside ``mapInPandas``. No shuffle, no stateful operator, no
+``mapInPandas`` call; each incoming Arrow batch is scored with one BLAS
+matmul entirely inside ``mapInPandas``. No shuffle, no stateful operator, no
 watermark needed — the stage is a pure per-batch map, so the SAME
 function scores a batch DataFrame and a streaming DataFrame (Spark's
 unified batch/streaming contract), and stream output == batch output
 row-for-row (tested). A small batch DataFrame (at most
 ``matchers.SERVE_DRIVER_MAX_DOCS`` docs, and within the driver's memory
-cap) skips the Python worker round trip: it is collected once and the
-same function scores it on the driver (``_serve``).
+cap) skips the Python worker round trip and the broadcast: it is
+collected once and the same function scores it on the driver
+(``_serve``).
 
 Serving keeps no kernel of its own. Queries vectorize through the map-side
 kernel (``mapside.vectorize_keys``, the one behind every packed TF-IDF
@@ -56,10 +57,10 @@ class TfidfIndex:
     None routes ``vectorize_keys`` to its per-doc fallback. ``to_mat``
     rows sit on the same sorted-term tids.
 
-    A served index is read-only: its first serving call broadcasts it
-    once (``_served``) and every later call on the same object reuses
-    that broadcast, so changing a field in place would not reach the
-    executors. Derive a new index with ``dataclasses.replace`` instead;
+    A served index is read-only: its first ``mapInPandas`` or streaming
+    call broadcasts it once (``_served``) and every later one on the same
+    object reuses that broadcast, so changing a field in place would not
+    reach the executors. Derive a new index with ``dataclasses.replace`` instead;
     the copy gets its own broadcast."""
 
     vocab: dict
@@ -68,7 +69,7 @@ class TfidfIndex:
     to_mat: np.ndarray       # (n_to, dim) L2-normalized tf-idf rows
     config: TfidfConfig
     vpack: tuple | None = None
-    # (SparkContext, Broadcast) of the first serving call; not pickled
+    # (SparkContext, Broadcast) of the first mapInPandas call; not pickled
     _bc: tuple | None = field(default=None, init=False, repr=False,
                               compare=False)
 
@@ -134,23 +135,23 @@ def _serve(docs: DataFrame, index: TfidfIndex, id_col: str, key_col: str,
     whose dense query, score and milli rows against ``index`` fit
     ``dense_cosine.BROADCAST_MAX_BYTES``, is collected once
     (``matchers.collect_bounded``) and scored on the driver, its result
-    returned as a local relation: no Python worker round trip. Anything
-    else, streaming DataFrames included, runs the same function per Arrow
-    batch inside ``mapInPandas`` against the index's one broadcast, made
-    on its first serving call either way."""
-    bc = _served(index, docs.sparkSession.sparkContext)
+    returned as a local relation: no Python worker round trip and no
+    broadcast. Anything else, streaming DataFrames included, runs the same
+    function per Arrow batch inside ``mapInPandas`` against the index's one
+    broadcast, made on its first such call."""
     docs = docs.select(
         F.col(id_col).alias(id_col), F.col(key_col).alias(key_col)
     )
     row_bytes = 8 * max(len(index.idf) + 2 * len(index.to_ids), 1)
     max_rows = min(matchers.SERVE_DRIVER_MAX_DOCS,
                    dense_cosine.BROADCAST_MAX_BYTES // row_bytes)
-    if not docs.isStreaming and max_rows > 0:
+    if not docs.isStreaming:
         pdf = matchers.collect_bounded(docs, max_rows)
         if pdf is not None:
             return docs.sparkSession.createDataFrame(
                 per_batch(index, pdf), schema
             )
+    bc = _served(index, docs.sparkSession.sparkContext)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ix: TfidfIndex = bc.value

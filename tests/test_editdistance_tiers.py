@@ -1,4 +1,4 @@
-"""The EditDistance facade has a driver tier (``editdistance._driver_pairs``)
+"""The EditDistance facade has a driver tier (``matchers.facade_tier``)
 for unblocked scans of at most ``matchers.EDIT_DRIVER_MAX_PAIRS`` pairs and
 a Spark tier (crossJoin + pandas UDF) above it. The tiers must be
 observationally identical: same rows column for column and the same
@@ -146,8 +146,9 @@ def test_driver_tier_bound_falls_back_to_spark(spark, monkeypatch,
 
 
 # executed stages of EditDistance match + collect on the 6×3 fixture,
-# measured on the driver tier: 8 (the Spark tier at the parent ran 10)
-ED_MATCH_STAGES = 8
+# measured on the driver tier: 6 since lists_to_df builds through Arrow
+# (8 from Python row tuples; the Spark tier ran 10)
+ED_MATCH_STAGES = 6
 
 
 def test_match_stage_budget(spark, from_list, to_list):

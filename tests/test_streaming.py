@@ -683,16 +683,20 @@ def test_serving_rounds_an_exact_half_milli_up(spark):
     assert not verdict.admitted.any()
 
 
-def test_serving_broadcasts_each_index_once(spark, fitted, monkeypatch):
-    """Repeated serving calls on one index share one broadcast (a
-    broadcast per call left a copy of the index in ``spark.local.dir``
-    for every call); a ``dataclasses.replace`` copy gets its own, and the
-    index still pickles without it."""
+def test_serving_broadcasts_each_index_once(spark, fitted, monkeypatch,
+                                            tmp_path):
+    """A driver-tier serving call broadcasts nothing. The first
+    ``mapInPandas`` call broadcasts the index once, and every later call
+    on it, a stream included, reuses that broadcast (a broadcast per call
+    left a copy of the index in ``spark.local.dir`` for every call); a
+    ``dataclasses.replace`` copy gets its own, and the index still
+    pickles without it."""
     import dataclasses
     import pickle
 
     from pyspark import SparkContext
 
+    import polyfuzz_spark.matchers as M
     from polyfuzz_spark.streaming.incremental import (
         TfidfIndex,
         admission_filter,
@@ -711,10 +715,18 @@ def test_serving_broadcasts_each_index_once(spark, fitted, monkeypatch):
     monkeypatch.setattr(SparkContext, "broadcast", spy)
     docs = lists_to_df(spark, NEW_DOCS)
     first = _canon(incremental_match(docs, index, top_n=2).toPandas())
+    admission_filter(docs, index, threshold=0.5).collect()
+    assert made == []
+
+    monkeypatch.setattr(M, "SERVE_DRIVER_MAX_DOCS", 0)  # mapInPandas
     for _ in range(3):
         again = _canon(incremental_match(docs, index, top_n=2).toPandas())
         pd.testing.assert_frame_equal(first, again)
         admission_filter(docs, index, threshold=0.5).collect()
+    stream = spark.readStream.schema("doc_id long, key string").parquet(
+        str(tmp_path)
+    )
+    incremental_match(stream, index)
     assert made == [index]
 
     copy = dataclasses.replace(index)
@@ -806,10 +818,10 @@ def test_serving_driver_tier_respects_memory_cap(spark, fitted, monkeypatch,
 
 
 # executed stages of admission_filter + collect on NEW_DOCS, measured on
-# the driver tier: 2 for the bounded collect (a limit per partition, then
-# one partition) and 1 for the result's collect. The mapInPandas tier
-# runs 1, a Python-worker stage that costs more than the three.
-ADMIT_STAGES = 3
+# the driver tier: 2 since lists_to_df builds through Arrow (3 from Python
+# row tuples). The mapInPandas tier runs 1, a Python-worker stage that
+# costs more than the two.
+ADMIT_STAGES = 2
 
 
 def test_admission_filter_stage_budget(spark, fitted):

@@ -1,4 +1,4 @@
-"""The facade TF-IDF match has a driver tier (``TFIDFMatcher._match_driver``)
+"""The facade TF-IDF match has a driver tier (``matchers.facade_tier``)
 below ``matchers.DRIVER_MAX_DOCS`` and Spark tiers above it. The tiers
 must be observationally identical: same rows column for column, same
 schema, same groups and the same saved IDF, bit for bit. Setting the
@@ -265,8 +265,9 @@ def _stages_run(sc, group: str) -> int:
 
 
 # executed stages of match + collect + group + collect on the 6×3 fixture,
-# measured on the driver tier: 8 + 17 (the Spark tier runs 27 + 128)
-MATCH_GROUP_STAGES = 25
+# measured on the driver tier: 21 since lists_to_df builds through Arrow
+# (23 from Python row tuples; the Spark tier runs 27 + 128)
+MATCH_GROUP_STAGES = 21
 
 
 def test_match_and_group_stage_budget(spark, from_list, to_list):
